@@ -40,10 +40,9 @@ object Bench {
       initialPartitions: Int = -1, inputMib: Long = -1L,
       nQueries: Int = -1): String = {
     // sfDir is operator-controlled, but this is the one line that must
-    // ALWAYS parse — escape the two characters that can break JSON
-    val sf = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
-    def names(xs: Seq[String]) = xs.map(n =>
-      "\"" + n.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
+    // ALWAYS parse
+    val sf = jsonEscape(sfDir)
+    def names(xs: Seq[String]) = xs.map(n => "\"" + jsonEscape(n) + "\"")
       .mkString("[", ",", "]")
     // rows_only_by_design: queries with NO oracleSql entry — derived,
     // so the label can never drift from the contract. Bounded: the
@@ -91,7 +90,11 @@ object Bench {
     * here exactly as in the map, so the two renderings can never
     * disagree. */
   private[graft] def perQueryLine(key: String, sec: Double): String =
-    s"""{"q":"$key","sec":${f3(sec)}}"""
+    s"""{"q":"${jsonEscape(key)}","sec":${f3(sec)}}"""
+
+  /** Escapes the two characters that can break a JSON string. */
+  private def jsonEscape(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
 
   /** More than this many CPU cores of FOREIGN work (host busy minus
     * this JVM) averaged over a query's wall time flags the measurement

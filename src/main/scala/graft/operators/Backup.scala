@@ -1,6 +1,8 @@
 package graft.operators
 
-import java.util.zip.CRC32
+import java.util.zip.{CheckedInputStream, CRC32}
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -295,27 +297,29 @@ object Backup {
   private val chunkNameRe =
     raw"(\d{8}T\d{6}Z)_(\d{8}T\d{6}Z)_([0-9a-f]{8})(?:-\d+)?\.log(?:\.gz)?".r
 
-  private def lineTsParse(s: String): java.time.LocalDateTime =
-    java.time.LocalDateTime.parse(s,
-      new java.time.format.DateTimeFormatterBuilder()
-        .appendPattern("yyyy-MM-dd HH:mm:ss")
-        .optionalStart()
-        .appendFraction(java.time.temporal.ChronoField.NANO_OF_SECOND,
-          0, 9, true)
-        .optionalEnd()
-        .toFormatter())
+  // the sink's line format, with the fraction optional
+  private val LineTsFmt = new java.time.format.DateTimeFormatterBuilder()
+    .appendPattern("yyyy-MM-dd HH:mm:ss")
+    .optionalStart()
+    .appendFraction(java.time.temporal.ChronoField.NANO_OF_SECOND, 0, 9, true)
+    .optionalEnd()
+    .toFormatter()
+
+  private val NameFmt = java.time.format.DateTimeFormatter.ofPattern(FileFmt)
 
   /** Backup FSCK — the audit the reference's chunk naming exists to
     * make possible (`cmd/backup.go:309-321`: the name CARRIES the CRC32
     * of the compressed bytes and the row min/max event time): re-derive
     * all three from the bytes on disk and report, per chunk, whether
-    * the file still matches its own name. One task per chunk file
-    * (the reference's upload granularity), each streaming its file
-    * twice — once raw for the CRC, once decoded for rows + the
-    * envelope — so driver memory is O(#chunks) verdict rows and no
-    * chunk is ever held in memory. An unreadable (truncated/corrupt)
-    * gzip is a VERDICT here (`readable = false`), not a crash: fsck's
-    * job is to report damage, the read path's is to refuse it.
+    * the file still matches its own name. The chunks are packed into at
+    * most `defaultParallelism` tasks (the rule `BackupSink.publish`
+    * uses), all reading with the session's Hadoop conf, broadcast once.
+    * Each chunk is read ONCE, streaming: the CRC32 is taken under the
+    * gzip decoder, which yields rows + the envelope — so driver memory
+    * is O(#chunks) verdict rows and no chunk is ever held in memory. An
+    * unreadable (truncated/corrupt) gzip is a VERDICT here
+    * (`readable = false`), not a crash: fsck's job is to report damage,
+    * the read path's is to refuse it.
     *
     * Unparseable names get `crcOk = envelopeOk = false` — a chunk that
     * lost its name has lost its integrity claim. */
@@ -326,70 +330,78 @@ object Backup {
       .getOrElse("ts")
     val files: Seq[(String, String)] = leaves.flatMap(l =>
       l.files.map(f => (f, l.values.getOrElse(partitionColumn, null))))
-    // Serialize the SESSION's hadoop conf into the tasks: a fresh
-    // Configuration() would drop non-default filesystem settings
-    // (object-store credentials, endpoints) and misreport remote
-    // chunks as unreadable (round-8 advisor item).
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val rdd = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .map { case (path, partVal) =>
-        val p = new Path(path)
-        val fs = p.getFileSystem(serConf.value)
-        // pass 1: CRC32 of the file bytes (what the name claims). A
-        // transport-level checksum failure (Hadoop's own sidecar CRCs
-        // on a corrupted local file) is itself a corruption VERDICT,
-        // not a crash.
-        val crc = new CRC32()
-        val crcComputed =
-          try {
-            val in = fs.open(p)
-            try {
-              val buf = new Array[Byte](64 * 1024)
-              var n = in.read(buf)
-              while (n > 0) { crc.update(buf, 0, n); n = in.read(buf) }
-              true
-            } finally in.close()
-          } catch { case scala.util.control.NonFatal(_) => false }
-        // pass 2: decoded rows + min/max event time
-        var rows = 0L
-        var readable = true
-        var minT: java.time.LocalDateTime = null
-        var maxT: java.time.LocalDateTime = null
+    val sc = spark.sparkContext
+    val conf = graft.sources.HadoopConfs.broadcast()
+    val rdd = sc
+      .parallelize(files,
+        math.max(1, math.min(files.size, sc.defaultParallelism)))
+      .mapPartitions { it =>
+        val hconf = conf.value.value
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        try {
-          val r = graft.sources.BackupSource.open(path)
-          try {
-            var line = r.readLine()
-            while (line != null) {
-              rows += 1
-              val v = mapper.readTree(line).get(timeCol)
-              if (v != null && !v.isNull) {
-                val t = lineTsParse(v.asText())
-                if (minT == null || t.isBefore(minT)) minT = t
-                if (maxT == null || t.isAfter(maxT)) maxT = t
-              }
-              line = r.readLine()
-            }
-          } finally r.close()
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            readable = false; rows = -1L
-        }
-        val nameFmt = java.time.format.DateTimeFormatter.ofPattern(FileFmt)
-        p.getName match {
-          case chunkNameRe(from, to, hex) =>
-            val crcOk = crcComputed && f"${crc.getValue}%08x" == hex
-            val envOk = readable && minT != null &&
-              nameFmt.format(minT) == from && nameFmt.format(maxT) == to
-            FsckRow(path, partVal, rows, readable, crcOk, envOk)
-          case _ =>
-            FsckRow(path, partVal, rows, readable, crcOk = false,
-              envelopeOk = false)
+        it.map { case (path, partVal) =>
+          fsckChunk(path, partVal, timeCol, hconf, mapper)
         }
       }
     spark.createDataFrame(rdd)
+  }
+
+  /** One chunk's verdict from one read of its bytes (see [[fsck]]). */
+  private def fsckChunk(path: String, partVal: String, timeCol: String,
+                        conf: org.apache.hadoop.conf.Configuration,
+                        mapper: com.fasterxml.jackson.databind.ObjectMapper)
+      : FsckRow = {
+    val p = new Path(path)
+    val crc = new CRC32()
+    var rows = 0L
+    var readable = true
+    var crcComputed = false
+    var minT: java.time.LocalDateTime = null
+    var maxT: java.time.LocalDateTime = null
+    val in =
+      try new CheckedInputStream(p.getFileSystem(conf).open(p), crc)
+      catch { case NonFatal(_) => null }
+    if (in == null) { readable = false; rows = -1L }
+    else {
+      var r: java.io.BufferedReader = null
+      try {
+        r = graft.sources.BackupSource.reader(path, in)
+        var line = r.readLine()
+        while (line != null) {
+          rows += 1
+          val v = mapper.readTree(line).get(timeCol)
+          if (v != null && !v.isNull) {
+            val t = java.time.LocalDateTime.parse(v.asText(), LineTsFmt)
+            if (minT == null || t.isBefore(minT)) minT = t
+            if (maxT == null || t.isAfter(maxT)) maxT = t
+          }
+          line = r.readLine()
+        }
+      } catch {
+        case NonFatal(_) => readable = false; rows = -1L
+      }
+      // The CRC must cover every byte the name claims, including those
+      // after the point where decoding stopped or failed. A
+      // transport-level checksum failure (Hadoop's own sidecar CRCs on
+      // a corrupted local file) is itself a corruption VERDICT, not a
+      // crash.
+      try {
+        val buf = new Array[Byte](64 * 1024)
+        while (in.read(buf) >= 0) {}
+        crcComputed = true
+      } catch { case NonFatal(_) => }
+      try { if (r != null) r.close() else in.close() }
+      catch { case NonFatal(_) => }
+    }
+    p.getName match {
+      case chunkNameRe(from, to, hex) =>
+        val crcOk = crcComputed && f"${crc.getValue}%08x" == hex
+        val envOk = readable && minT != null &&
+          NameFmt.format(minT) == from && NameFmt.format(maxT) == to
+        FsckRow(path, partVal, rows, readable, crcOk, envOk)
+      case _ =>
+        FsckRow(path, partVal, rows, readable, crcOk = false,
+          envelopeOk = false)
+    }
   }
 
   /** Retention prune — delete every chunk whose NAME-claimed envelope

@@ -7,6 +7,7 @@ import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -17,6 +18,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the backup sink's on-disk format
   * (`graft.operators.Backup`): Hive-style partition directories
@@ -167,11 +169,16 @@ object BackupSource {
     (partCols.toSeq, leaves.toSeq)
   }
 
-  /** Open a chunk file (gzip by extension). */
-  def open(file: String): java.io.BufferedReader = {
+  /** Open a chunk file (gzip by extension) with `conf`: the driver's
+    * [[HadoopConfs.active]], or in a task the conf its scan broadcast. */
+  def open(file: String, conf: Configuration): java.io.BufferedReader = {
     val p = new Path(file)
-    val fs = p.getFileSystem(HadoopConfs.active())
-    val raw = fs.open(p)
+    reader(file, p.getFileSystem(conf).open(p))
+  }
+
+  /** Line reader over a chunk file's raw bytes `raw` (gzip by the
+    * extension of `file`). */
+  def reader(file: String, raw: java.io.InputStream): java.io.BufferedReader = {
     val in = if (file.endsWith(".gz")) new GZIPInputStream(raw) else raw
     new java.io.BufferedReader(new java.io.InputStreamReader(
       in, java.nio.charset.StandardCharsets.UTF_8))
@@ -186,10 +193,11 @@ object BackupSource {
     * Still bounded: ≤ 2·SampleDirs files, SampleLines lines each. */
   def sampleDataFields(leaves: Seq[Leaf]): Seq[StructField] = {
     val mapper = new ObjectMapper()
+    val conf = HadoopConfs.active()
     // LinkedHashMap: field order = first-seen order, deterministic
     val types = new java.util.LinkedHashMap[String, DataType]()
     def sampleFile(file: String): Unit = {
-      val r = open(file)
+      val r = open(file, conf)
       try {
         var i = 0
         var line = r.readLine()
@@ -902,6 +910,12 @@ trait BackupPlanning { self: Scan =>
         chunkMayMatch(r, timeCol.get, timeFilters.toSeq))
     }
 
+  /** The session's Hadoop conf for this scan's tasks: broadcast once
+    * per Scan (or stream) instance, on the driver, when its first
+    * reader factory is created. */
+  protected lazy val taskConf: Broadcast[SerializableConfiguration] =
+    HadoopConfs.broadcast()
+
   /** The complete-manifest view, read once per Scan instance; batch
     * planning and statistics serve from it when present (no tree
     * listing, no per-file stat), else from the pruned walk. Lazy:
@@ -950,7 +964,7 @@ class BackupScan(val path: String, required: StructType,
     plannedFiles().toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BackupReaderFactory(required, partCols.toSet, limit, topN)
+    new BackupReaderFactory(required, partCols.toSet, taskConf, limit, topN)
 
   /** Streaming read: tail a growing backup as micro-batches (see
     * [[BackupMicroBatchStream]]). The same directory/zone-map pruning
@@ -1056,6 +1070,7 @@ class BackupAggScan(val path: String, partCols: Seq[String],
     new PartitionReaderFactory {
       private val specs = aggSpecs
       private val groups = groupCols
+      private val conf = taskConf
       override def createReader(p: InputPartition)
           : PartitionReader[InternalRow] = {
         val bp = p.asInstanceOf[BackupFilePartition]
@@ -1066,7 +1081,7 @@ class BackupAggScan(val path: String, partCols: Seq[String],
             lazy val lines: Long = {
               if (bp.file == null) 0L
               else {
-                val r = BackupSource.open(bp.file)
+                val r = BackupSource.open(bp.file, conf.value.value)
                 try {
                   var n = 0L
                   while (r.readLine() != null) n += 1
@@ -1103,12 +1118,14 @@ final case class BackupFilePartition(file: String,
     extends InputPartition
 
 class BackupReaderFactory(required: StructType, partCols: Set[String],
+                          conf: Broadcast[SerializableConfiguration],
                           limit: Option[Int] = None,
                           topN: Option[BackupSource.TopNSpec] = None)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val bp = p.asInstanceOf[BackupFilePartition]
-    new BackupPartitionReader(bp, required, partCols, limit, topN)
+    new BackupPartitionReader(bp, required, partCols, conf.value.value,
+      limit, topN)
   }
 }
 
@@ -1491,20 +1508,20 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BackupReaderFactory(required, partCols.toSet)
+    new BackupReaderFactory(required, partCols.toSet, taskConf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 class BackupPartitionReader(p: BackupFilePartition, required: StructType,
-                            partCols: Set[String],
+                            partCols: Set[String], conf: Configuration,
                             limit: Option[Int] = None,
                             topN: Option[BackupSource.TopNSpec] = None)
     extends PartitionReader[InternalRow] {
   import BackupSource._
 
-  private val reader = open(p.file)
+  private val reader = open(p.file, conf)
   private val mapper = new ObjectMapper()
   private val maxLines: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
   private var emitted = 0L

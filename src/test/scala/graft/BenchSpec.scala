@@ -105,6 +105,15 @@ class BenchSpec extends SparkTestBase {
       == """{"q":"q01_pricing_summary","sec":-1.500}""")
   }
 
+  test("per-query line escapes quotes and backslashes in the key") {
+    val key = "odd\"key\\name"
+    val line = Bench.perQueryLine(key, 1.0)
+    assert(line == """{"q":"odd\"key\\name","sec":1.000}""")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(node.get("q").asText() == key)
+    assert(node.get("sec").asDouble() == 1.0)
+  }
+
   test("final line is valid minimal JSON with the keys the driver parses") {
     val line = Bench.finalLine(64.9, 64.9, 0, "/tmp/x")
     assert(line.startsWith("{") && line.endsWith("}"))

@@ -118,7 +118,8 @@ class BackupSinkSpec extends SparkTestBase {
     leaves.foreach { leaf =>
       val chunks = leaf.listFiles().filter(_.getName.endsWith(".log.gz"))
       val ranges = chunks.map { f =>
-        val r = BackupSource.open(f.getAbsolutePath)
+        val r = BackupSource.open(f.getAbsolutePath,
+          spark.sparkContext.hadoopConfiguration)
         val ts = Iterator.continually(r.readLine()).takeWhile(_ != null)
           .map(l => mapper.readTree(l).get("ts").asText()).toVector
         r.close()
