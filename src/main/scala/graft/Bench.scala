@@ -254,20 +254,22 @@ object Bench {
     math.min(4096, math.max(cpus, pow2))
   }
 
-  /** Stop the local ChecksumFileSystem writing `.crc` sidecars. This
-    * container has no libhadoop, so Hadoop's setPermission falls back
-    * to a FORKED `chmod` per file create (Shell.execCommand) — thread
-    * dumps of the streaming backup stagers showed 32/32 task threads
-    * blocked on process spawn, 1,660 task-run-seconds against 247
-    * cpu-seconds at factor-100 scale — and the sidecars double the
-    * file count. The backup format carries its own CRC32 in every
-    * chunk name, so the sidecars are pure overhead here (measured:
-    * s18 65 → 34 s, s22 35 → 25 s at sf10). Mutates the CACHED file:///
-    * instance, which local[*] executors share; replacing the fs class
-    * outright (fs.file.impl = RawLocalFileSystem) is NOT equivalent —
-    * it breaks RocksDB state-store commits, which need the checksum
-    * fs's create/rename semantics. On a real cluster (HDFS/S3A +
-    * native IO) neither the fork nor the sidecar exists. */
+  /** Stop the local ChecksumFileSystem writing `.crc` sidecars for
+    * Spark's OWN local writes (parquet/ORC outputs such as Restore's,
+    * streaming checkpoints and state stores). Without libhadoop every
+    * file create on that filesystem forks a `chmod`
+    * (Shell.execCommand) — thread dumps of streaming stagers once
+    * showed 32/32 task threads blocked on process spawn — and the
+    * sidecars double the file count. Connector writes no longer go
+    * through this instance: graftbackup writes use
+    * [[graft.sources.WriteFs]], which sets modes in-process and keeps
+    * its sidecars, so this setting does not reach them. Mutates the
+    * CACHED file:/// instance, which local[*] executors share;
+    * replacing the fs class outright (fs.file.impl =
+    * RawLocalFileSystem) is NOT equivalent — it breaks RocksDB
+    * state-store commits, which need the checksum fs's create/rename
+    * semantics. On a real cluster (HDFS/S3A + native IO) neither the
+    * fork nor the sidecar exists. */
   private[graft] def disableLocalChecksumSidecars(spark: SparkSession): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)

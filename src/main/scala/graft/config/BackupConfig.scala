@@ -21,12 +21,15 @@ final case class BackupConfig(
     maxRowsPerChunk: Int = 1000,
     dryRun: Boolean = false,
     gzip: Boolean = true,
-    /** Guard for the driver-side per-partition counts collect: the
+    /** Guard for the DRY RUN's per-partition counts collect: the
       * reference's model (one goroutine per partition value) assumes
       * few distinct values, but a high-cardinality partition column
-      * would collect unbounded rows to the driver. Runs whose distinct
-      * count exceeds this fail fast with a clear message instead of
-      * OOMing the driver; raise it deliberately for wide layouts. */
+      * would collect unbounded rows to the driver. Dry runs whose
+      * distinct count exceeds this fail fast with a clear message
+      * instead of OOMing the driver; raise it deliberately for wide
+      * layouts. A real run collects nothing for its counts: it sums the
+      * committed chunk list the driver already holds (at least one chunk
+      * per partition value), so the guard does not run there. */
     maxCollectedPartitions: Int = 100000,
     /** Multi-column layout generalization of the reference's single
       * `--column` (`cmd/backup.go:59-64`): when non-empty this list

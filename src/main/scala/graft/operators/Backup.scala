@@ -4,7 +4,7 @@ import java.util.zip.{CheckedInputStream, CRC32}
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import graft.Tables
 import graft.config.BackupConfig
 import graft.functions.Stringify
 
-/** The reference's entire pipeline as ONE Catalyst-planned job.
+/** The reference's entire pipeline as ONE Catalyst-planned write.
   *
   * Reference shape (`cmd/backup.go`): phase-1 partition discovery
   * (`170-211`), then an unbounded goroutine per partition value each
@@ -25,10 +25,11 @@ import graft.functions.Stringify
   * sink ([[graft.sources.BackupSink]]). Discovery, fan-out, paging,
   * counters and the error fold all disappear into the plan: task
   * parallelism replaces goroutines, the sink's `maxRecordsPerChunk`
-  * rotation replaces paging, metrics replace mutex counters. ZERO
-  * shuffles — the sink deliberately requires only a per-task sort
-  * (partition columns, then time desc), never a cluster-by, so a hot
-  * partition value can't funnel into one task.
+  * rotation replaces paging, metrics replace mutex counters. The sink
+  * itself requires only a per-task sort (partition columns, then time
+  * desc), never a cluster-by, so a hot partition value can't funnel
+  * into one task; [[run]] adds one repartition by leaf directory
+  * (`spark.graft.backup.clusterWrite`, see below).
   *
   * The per-file `<fromTS>_<toTS>_<crc32>.log.gz` naming contract is
   * computed TASK-SIDE as the bytes stream (CRC32 wraps the compressed
@@ -62,14 +63,20 @@ object Backup {
     col(cfg.timeColumn) >= lit(java.sql.Timestamp.from(cfg.from)) &&
       col(cfg.timeColumn) <= lit(java.sql.Timestamp.from(cfg.to))
 
-  /** The extraction+sink plan (dry-run short-circuits the write,
-    * keeping the count for effect parity — `cmd/backup.go:102-105`).
-    */
+  /** The extraction+sink plan: ONE scan of the input, written through
+    * the sink. `rowsPerPartition` is summed from the committed chunk
+    * list the sink hands back, so a real run submits no job beyond the
+    * write itself (publish adds a rename job only past 1000 chunks, see
+    * [[graft.sources.BackupSink.publish]]). A dry run skips the write
+    * and runs one aggregate job instead, keeping the count for effect
+    * parity (`cmd/backup.go:102-105`); both key partitions the way the
+    * sink names their directories. */
   def run(spark: SparkSession, cfg: BackupConfig,
           faithfulStrings: Boolean = false): Result = {
     val src = Tables.loadPath(spark, cfg.inputPath)
     val windowed = src.filter(timeWindow(cfg))
       .where(cfg.partCols.map(col(_).isNotNull).reduce(_ && _))
+    if (cfg.dryRun) return Result(dryRunCounts(spark, windowed, cfg), Nil)
 
     // Faithful mode stringifies every leaf EXCEPT the partition columns
     // (directory metadata) and the time column — the sink derives
@@ -86,24 +93,6 @@ object Backup {
         }
         windowed.select(cols: _*)
       } else windowed
-
-    // Metadata-sized by the reference's own model, but guarded: a
-    // high-cardinality partition column must not collect unbounded
-    // rows to the driver (cfg.maxCollectedPartitions). Multi-column
-    // layouts key the map by the values joined with '/', mirroring the
-    // directory nesting.
-    val countRows = windowed.groupBy(cfg.partCols.map(col): _*).count()
-      .take(cfg.maxCollectedPartitions + 1)
-    if (countRows.length > cfg.maxCollectedPartitions)
-      throw new IllegalStateException(
-        s"partition columns ${cfg.partCols.mkString(",")} have more than " +
-          s"${cfg.maxCollectedPartitions} distinct value tuples; raise " +
-          "BackupConfig.maxCollectedPartitions if this is intended")
-    val counts = countRows.map(r =>
-      (0 until cfg.partCols.size).map(i => String.valueOf(r.get(i)))
-        .mkString("/") -> r.getLong(cfg.partCols.size)).toMap
-
-    if (cfg.dryRun) return Result(counts, Nil)
 
     // r16 opt: cluster the write by LEAF DIRECTORY (partition columns +
     // the sink's date_dir day, same UTC session zone) before the sink.
@@ -153,13 +142,38 @@ object Backup {
           case Array(f, t, c) => (f, t, c)
           case _ => ("", "", "")
         }
-        // `partition` mirrors the counts key: per-column values joined
-        // with '/' (a single-column layout keeps the bare value)
+        // per-column directory values joined with '/' (a single-column
+        // layout keeps the bare value)
         ChunkInfo(p.path,
           cfg.partCols.map(c => dirs.getOrElse(c, null)).mkString("/"),
           dirs.getOrElse("date_dir", null), from, to, crc, p.rows)
       }
-    Result(counts, chunks)
+    Result(chunks.groupMapReduce(_.partition)(_.rows)(_ + _), chunks)
+  }
+
+  /** The dry run's rows per partition tuple: one aggregate job over the
+    * window, keyed like [[ChunkInfo.partition]] (each column rendered
+    * as the sink names its directory, joined with '/'). Metadata-sized
+    * by the reference's own model, but guarded: a high-cardinality
+    * partition column must not collect unbounded rows to the driver
+    * (`cfg.maxCollectedPartitions`). */
+  private def dryRunCounts(spark: SparkSession, windowed: DataFrame,
+                           cfg: BackupConfig): Map[String, Long] = {
+    val counted = windowed.groupBy(cfg.partCols.map(col): _*).count()
+    val rows = counted.limit(cfg.maxCollectedPartitions + 1)
+      .queryExecution.executedPlan.executeCollect()
+    if (rows.length > cfg.maxCollectedPartitions)
+      throw new IllegalStateException(
+        s"partition columns ${cfg.partCols.mkString(",")} have more than " +
+          s"${cfg.maxCollectedPartitions} distinct value tuples; raise " +
+          "BackupConfig.maxCollectedPartitions if this is intended")
+    val fields = counted.schema.fields.take(cfg.partCols.size)
+    val fmt = graft.sources.BackupSink.lineFormatter(sessionTz(spark))
+    rows.map { r =>
+      fields.indices.map(i =>
+        graft.sources.BackupSink.partitionValue(r, i, fields(i), fmt))
+        .mkString("/") -> r.getLong(fields.length)
+    }.toMap
   }
 
   /** Driver-side backup metadata stamp, written at the output root. The
@@ -191,7 +205,7 @@ object Backup {
     }
 
   private def writeMeta(spark: SparkSession, cfg: BackupConfig): Unit = {
-    val fs = FileSystem.get(new java.net.URI(cfg.outputPath),
+    val fs = graft.sources.WriteFs.forPath(new Path(cfg.outputPath),
       spark.sparkContext.hadoopConfiguration)
     val json =
       s"""{"sessionTimeZone":"${jsonEscape(sessionTz(spark))}",""" +
@@ -223,7 +237,7 @@ object Backup {
     */
   def incremental(spark: SparkSession, inputPath: String, outputRoot: String,
                   newTo: java.time.Instant): Unit = {
-    val fs = FileSystem.get(new java.net.URI(outputRoot),
+    val fs = graft.sources.WriteFs.forPath(new Path(outputRoot),
       spark.sparkContext.hadoopConfiguration)
     val metaPath = new Path(new Path(outputRoot), MetaFile)
     require(fs.exists(metaPath),
@@ -421,7 +435,7 @@ object Backup {
     val cutoffMicros = java.time.LocalDateTime
       .ofInstant(cutoff, java.time.ZoneOffset.UTC)
       .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    val fs = new Path(root).getFileSystem(
+    val fs = graft.sources.WriteFs.forPath(new Path(root),
       spark.sparkContext.hadoopConfiguration)
     var deleted = 0L
     leaves.foreach { l =>

@@ -48,6 +48,7 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
   override def name(): String = catalogName
 
   private def fs = new Path(warehouse).getFileSystem(HadoopConfs.active())
+  private def writeFs = WriteFs.forPath(new Path(warehouse), HadoopConfs.active())
 
   private def pathOf(parts: Seq[String]): Path =
     parts.foldLeft(new Path(warehouse))((p, s) => new Path(p, s))
@@ -121,7 +122,7 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
       refs(0).fieldNames()(0)
     }.filterNot(_ == "date_dir") // derived by the sink, never declared
     val timeCol = Option(properties.get("timeColumn"))
-    fs.mkdirs(dir): Unit
+    writeFs.mkdirs(dir): Unit
     val zone = org.apache.spark.sql.SparkSession.active.conf
       .getOption("spark.sql.session.timeZone")
       .getOrElse(java.util.TimeZone.getDefault.getID)
@@ -133,7 +134,7 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
         s""""timeColumn":"${e(timeCol.getOrElse("ts"))}",""" +
         s""""partitionColumn":"${e(partCols.mkString(","))}",""" +
         s""""createSchema":"${e(schema.json)}"}"""
-    val out = fs.create(new Path(dir, "_GRAFT_META.json"), true)
+    val out = writeFs.create(new Path(dir, "_GRAFT_META.json"), true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     new BackupTable(dir.toString, schema, partCols)
@@ -225,7 +226,7 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
 
   override def createNamespace(namespace: Array[String],
                                metadata: java.util.Map[String, String]): Unit = {
-    fs.mkdirs(pathOf(namespace.toSeq)): Unit
+    writeFs.mkdirs(pathOf(namespace.toSeq)): Unit
   }
 
   override def alterNamespace(namespace: Array[String],

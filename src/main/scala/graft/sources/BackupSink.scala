@@ -83,6 +83,32 @@ object BackupSink {
     sb.toString
   }
 
+  /** Line timestamps (and timestamp partition values): [[LineTsFmt]]
+    * in the write's session zone. */
+  def lineFormatter(zone: String): java.time.format.DateTimeFormatter =
+    java.time.format.DateTimeFormatter.ofPattern(LineTsFmt)
+      .withZone(java.time.ZoneId.of(zone))
+
+  /** A partition value as its leaf directory names it, before path
+    * escaping (null stays null). The task writer names directories with
+    * it and [[graft.operators.Backup.run]]'s dry run keys its counts
+    * with it, so both agree with the unescaped directory values. */
+  def partitionValue(
+      g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
+      i: Int, f: StructField,
+      lineFmt: java.time.format.DateTimeFormatter): String =
+    if (g.isNullAt(i)) null
+    else f.dataType match {
+      case StringType => g.getUTF8String(i).toString
+      case LongType => g.getLong(i).toString
+      case IntegerType => g.getInt(i).toString
+      case TimestampType =>
+        lineFmt.format(java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L))
+      case DateType => java.time.LocalDate.ofEpochDay(g.getInt(i)).toString
+      case other => throw new IllegalArgumentException(
+        s"unsupported partition column type $other for ${f.name}")
+    }
+
   /** One published chunk: where it was staged and where it belongs.
     * `bytes` is the final on-disk size, counted by the task writer at
     * the lowest stream level — it rides the manifest record so batch
@@ -119,43 +145,22 @@ object BackupSink {
                                        chunks: Seq[PublishedChunk]): Unit =
     publishedByRoot.put(root, chunks): Unit
 
-  /** Above this chunk count the publish renames run as ONE Spark job
-    * over the commit's chunk list (executor-side fs clients) instead of
-    * a driver loop. A 100 TB backup implies millions of chunks — a
-    * driver serial point of that many rename RPCs is the one O(#files)
-    * step the sink had left; below the threshold a job costs more than
-    * it saves. SPARK_GRAFT_PUBLISH_THRESHOLD overrides for local A/B
-    * measurement only (a huge value forces the driver loop — the
-    * "before" arm of the r11 probe). */
-  val DistributedPublishThreshold: Int = {
-    // defensive parse: this initializes at object load, and a malformed
-    // override ('64m', empty) would otherwise surface as an
-    // ExceptionInInitializerError breaking EVERY later BackupSink use
-    // with an unrelated-looking error (r11 advisor); a debugging knob
-    // must never be able to take the sink down
-    val raw = sys.env.get("SPARK_GRAFT_PUBLISH_THRESHOLD")
-    val parsed = raw.flatMap(s =>
-      scala.util.Try(s.trim.toInt).toOption.filter(_ > 0))
-    if (raw.isDefined && parsed.isEmpty)
-      System.err.println(s"[backup] ignoring malformed " +
-        s"SPARK_GRAFT_PUBLISH_THRESHOLD=${raw.get} (using default 64)")
-    parsed.getOrElse(64)
-  }
-
   /** Publish: renames of staged files into their leaf directories,
     * collision `-seq` suffixes (shared by the batch commit and every
-    * streaming epoch commit). Small commits rename driver-side; past
-    * [[DistributedPublishThreshold]] the renames are shipped as a tiny
-    * Spark job, so driver work is manifest I/O only — name PLANNING
-    * stays driver-side either way (it is a per-leaf in-memory set walk,
-    * and the streaming intent marker needs the full list before the
-    * first rename). Renames are idempotent per chunk (source gone +
-    * destination present = an earlier attempt of the same task already
-    * did it), so rename-job task retries cannot fail a half-renamed
-    * partition. Returns the final location of every chunk. When
-    * `planned` destinations are supplied (the streaming intent-marker
-    * path) they are used verbatim — the marker must list exactly what
-    * publish will create. */
+    * streaming epoch commit). The renames are packed ~1000 per slice
+    * into at most `defaultParallelism` slices; one slice runs as a
+    * driver loop, more than one (over 1000 chunks) ships as ONE Spark
+    * job with executor-side filesystem clients, so a million-chunk
+    * backup has no driver serial point of that many rename RPCs, while
+    * a small commit pays no job. Name PLANNING stays driver-side either
+    * way (it is a per-leaf in-memory set walk, and the streaming intent
+    * marker needs the full list before the first rename). Renames are
+    * idempotent per chunk (source gone + destination present = an
+    * earlier attempt of the same task already did it), so rename-job
+    * task retries cannot fail a half-renamed partition. Returns the
+    * final location of every chunk. When `planned` destinations are
+    * supplied (the streaming intent-marker path) they are used verbatim
+    * — the marker must list exactly what publish will create. */
   def publish(fs: org.apache.hadoop.fs.FileSystem,
               rootPath: Path, cfg: Config,
               messages: Array[WriterCommitMessage],
@@ -170,20 +175,19 @@ object BackupSink {
     val pairs = all.zip(dests)
     val session = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
-    if (pairs.size >= DistributedPublishThreshold && session.isDefined) {
-      val sc = session.get.sparkContext
+    // ~1000 renames per slice: enough to amortize task launch, few
+    // enough that a straggling object-store client doesn't hold the
+    // whole commit
+    val slices = session.fold(1)(s => math.min(
+      s.sparkContext.defaultParallelism, math.ceil(pairs.size / 1000.0).toInt))
+    if (slices > 1) {
       val hconf = cfg.hadoop
       val work = pairs.map { case (c, dst) => (c.stagedPath, dst.toString) }
-      // ~1000 renames per task: enough to amortize task launch, few
-      // enough that a straggling object-store client doesn't hold the
-      // whole commit
-      val slices = math.max(1, math.min(sc.defaultParallelism,
-        math.ceil(work.size / 1000.0).toInt))
-      sc.parallelize(work, slices).foreachPartition { it =>
+      session.get.sparkContext.parallelize(work, slices).foreachPartition { it =>
         var efs: FileSystem = null
         it.foreach { case (src, dstStr) =>
           val dst = new Path(dstStr)
-          if (efs == null) efs = dst.getFileSystem(hconf.value)
+          if (efs == null) efs = WriteFs.forPath(dst, hconf.value)
           renameIdempotent(efs, new Path(src), dst)
         }
       }
@@ -536,7 +540,7 @@ class BackupBatchWrite(cfg: BackupSink.Config, schema: StructType)
     new BackupWriterFactory(cfg, schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(cfg.root).getFileSystem(cfg.hadoop.value)
+    val fs = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
     val rootPath = new Path(cfg.root)
     if (cfg.truncate) {
       // overwrite: clear existing partition directories (and stale
@@ -568,7 +572,7 @@ class BackupBatchWrite(cfg: BackupSink.Config, schema: StructType)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(cfg.root).getFileSystem(cfg.hadoop.value)
+    val fs = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
     fs.delete(new Path(cfg.stagingDir), true): Unit
   }
 
@@ -614,7 +618,7 @@ class BackupStreamingWrite(cfg: BackupSink.Config, schema: StructType)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(cfg.root).getFileSystem(cfg.hadoop.value)
+    val fs = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
     val rootPath = new Path(cfg.root)
     val marker = new Path(rootPath, s"_streaming_commits/epoch-$epochId")
     val intent = new Path(rootPath,
@@ -701,7 +705,7 @@ class BackupStreamingWrite(cfg: BackupSink.Config, schema: StructType)
 
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(cfg.root).getFileSystem(cfg.hadoop.value)
+    val fs = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
     messages.foreach {
       case TaskChunks(chunks) => chunks.foreach(c =>
         fs.delete(new Path(c.stagedPath), false): Unit)
@@ -736,9 +740,9 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
     extends DataWriter[InternalRow] {
   import BackupSink._
 
-  private val fs: FileSystem = new Path(cfg.root).getFileSystem(cfg.hadoop.value)
-  private val partIdx: Seq[(String, Int)] =
-    cfg.partCols.map(c => c -> schema.fieldIndex(c))
+  private val fs: FileSystem = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
+  private val partIdx: Seq[(StructField, Int)] =
+    cfg.partCols.map(c => schema(c) -> schema.fieldIndex(c))
   private val timeIdx: Int = schema.fieldIndex(cfg.timeCol)
   private val dataFields: Seq[(StructField, Int)] = schema.fields.zipWithIndex
     .filter { case (f, _) => !cfg.partCols.contains(f.name) }.toSeq
@@ -748,8 +752,7 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
     .ofPattern("yyyyMMdd").withZone(zone)
   private val nameFmt = java.time.format.DateTimeFormatter
     .ofPattern(FileFmt).withZone(zone)
-  private val lineFmt = java.time.format.DateTimeFormatter
-    .ofPattern(LineTsFmt).withZone(zone)
+  private val lineFmt = lineFormatter(cfg.zone)
 
   /** Counts final on-disk bytes below the CRC/gzip chain, so the
     * manifest record can carry sizes and batch planning never needs a
@@ -801,19 +804,6 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
   private def escape(v: String): String =
     if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     else ExternalCatalogUtils.escapePathName(v)
-
-  private def partString(row: InternalRow, f: StructField, i: Int): String =
-    if (row.isNullAt(i)) null
-    else f.dataType match {
-      case StringType => row.getUTF8String(i).toString
-      case LongType => row.getLong(i).toString
-      case IntegerType => row.getInt(i).toString
-      case TimestampType =>
-        lineFmt.format(java.time.Instant.EPOCH.plusNanos(row.getLong(i) * 1000L))
-      case DateType => java.time.LocalDate.ofEpochDay(row.getInt(i)).toString
-      case other => throw new IllegalArgumentException(
-        s"unsupported partition column type $other for ${f.name}")
-    }
 
   /** Recursive NDJSON value encoder over the §1.2 lattice (the
     * reference's `helpers.go` recursion, Spark-side): scalars as JSON
@@ -937,9 +927,9 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
     require(!row.isNullAt(timeIdx),
       s"graftbackup write: null ${cfg.timeCol} cannot be chunk-named")
     val ts = row.getLong(timeIdx)
-    val relDir = (partIdx.map { case (c, i) =>
-      s"${ExternalCatalogUtils.escapePathName(c)}=" +
-        escape(partString(row, schema(c), i))
+    val relDir = (partIdx.map { case (f, i) =>
+      s"${ExternalCatalogUtils.escapePathName(f.name)}=" +
+        escape(partitionValue(row, i, f, lineFmt))
     } :+ s"date_dir=${dayFmt.format(
       java.time.Instant.EPOCH.plusNanos(ts * 1000L))}").mkString("/")
     val chunk = open.getOrElseUpdate(relDir, { chunkSeq += 1; new Chunk(relDir) })

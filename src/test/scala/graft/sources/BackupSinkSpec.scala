@@ -256,10 +256,11 @@ class BackupSinkSpec extends SparkTestBase {
   test("distributed publish torn write: rename job ran, driver died " +
     "before the marker — replay yields the epoch exactly once") {
     // Same window as the test above, but through the DISTRIBUTED rename
-    // path (>= DistributedPublishThreshold chunks ships the renames as
-    // a Spark job, BackupSink.publish): the chunk count forces the job,
-    // the "crash" lands after the job fully ran but before the
-    // intent->marker promotion — the widest torn window the r10 rewrite
+    // path (more than 1000 chunks fill more than one rename slice, which
+    // ships the renames as a Spark job, BackupSink.publish): the chunk
+    // count forces the job, the "crash" lands after the job fully ran
+    // but before the intent->marker promotion — the widest torn window
+    // the r10 rewrite
     // introduced. Recovery must roll back every intent-listed chunk
     // (all of them exist this time) and republish the re-staged attempt
     // exactly once: no duplicate rows, no missing rows, no stray files.
@@ -271,18 +272,22 @@ class BackupSinkSpec extends SparkTestBase {
       hadoop = new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
     val sw = new BackupStreamingWrite(cfg, sch)
-    val nRows = 100
+    // one row per chunk; the fixture has 1000 events, so a shifted copy
+    // supplies the rest
+    val nRows = 1001
+    val rows = events.union(events.withColumn("event_id",
+        ($"event_id" + 1000000).cast(sch("event_id").dataType))).limit(nRows)
+      .queryExecution.toRdd.map(_.copy()).collect()
     def stageRows(taskId: Long) = {
       val w = new BackupDataWriter(cfg, sch, 0, taskId)
-      events.limit(nRows).queryExecution.toRdd.map(_.copy()).collect()
-        .foreach(w.write)
+      rows.foreach(w.write)
       w.commit()
     }
     val msgA = stageRows(1L)
     val chunksA = msgA.asInstanceOf[BackupSink.TaskChunks].chunks
-    assert(chunksA.size >= BackupSink.DistributedPublishThreshold,
-      s"need >=${BackupSink.DistributedPublishThreshold} chunks to " +
-        s"exercise the distributed rename job, got ${chunksA.size}")
+    assert(chunksA.size > 1000 && spark.sparkContext.defaultParallelism > 1,
+      s"need >1000 chunks over >1 slice to exercise the distributed " +
+        s"rename job, got ${chunksA.size}")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootPath = new org.apache.hadoop.fs.Path(dir)
