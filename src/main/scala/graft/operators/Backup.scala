@@ -11,6 +11,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.config.BackupConfig
 import graft.functions.Stringify
+import graft.sources.{BackupMeta, BackupSink, BackupSource, ChunkName,
+  HadoopConfs, WriteFs}
 
 /** The reference's entire pipeline as ONE Catalyst-planned write.
   *
@@ -28,14 +30,14 @@ import graft.functions.Stringify
   * rotation replaces paging, metrics replace mutex counters. The sink
   * itself requires only a per-task sort (partition columns, then time
   * desc), never a cluster-by, so a hot partition value can't funnel
-  * into one task; [[run]] adds one repartition by leaf directory
-  * (`spark.graft.backup.clusterWrite`, see below).
+  * into one task; [[run]] adds one repartition by leaf directory.
   *
-  * The per-file `<fromTS>_<toTS>_<crc32>.log.gz` naming contract is
-  * computed TASK-SIDE as the bytes stream (CRC32 wraps the compressed
-  * output stream, min/max event time tracked per chunk) — no repair
-  * pass, no re-read of written bytes; the driver's commit does
-  * O(#chunks) renames and hands the chunk list back through
+  * The per-file `<fromTS>_<toTS>_<crc32>.log.gz` naming contract
+  * ([[graft.sources.ChunkName]]) is computed TASK-SIDE as the bytes
+  * stream (CRC32 wraps the compressed output stream, min/max event
+  * time tracked per chunk) — no repair pass, no re-read of written
+  * bytes; the driver's commit does O(#chunks) renames and hands the
+  * chunk list back through
   * [[graft.sources.BackupSink.takePublished]].
   */
 object Backup {
@@ -46,8 +48,6 @@ object Backup {
 
   final case class Result(rowsPerPartition: Map[String, Long],
                           chunks: Seq[ChunkInfo])
-
-  private val FileFmt = "yyyyMMdd'T'HHmmss'Z'"
 
   /** Phase-1 discovery as a plan fragment: distinct non-null partition
     * values in the window (`cmd/backup.go:170-211`). Small result —
@@ -94,32 +94,18 @@ object Backup {
         windowed.select(cols: _*)
       } else windowed
 
-    // r16 opt: cluster the write by LEAF DIRECTORY (partition columns +
-    // the sink's date_dir day, same UTC session zone) before the sink.
-    // The sink's required per-task sort is (partCols asc, time desc),
-    // so co-locating each leaf's rows in one task yields the EXACT
-    // chunk set a single-task write produces (same per-dir row order →
-    // same maxRecords rolls → same <from>_<to>_<crc32> names) while the
-    // gzip/JSON encode — the write's real CPU — parallelizes across
-    // leaves. Guide §6: distribution on write is the read side's
-    // skipping lever too — one writer per leaf keeps consecutive chunks
-    // time-disjoint (tight zone-map envelopes) and the file count at
-    // O(leaves), not O(leaves × input tasks). The sink itself keeps
-    // accepting ANY distribution (the hot-leaf funnel is the caller's
-    // trade to make): spark.graft.backup.clusterWrite=false restores
-    // the pass-through layout for callers whose input partitioning
-    // already is the layout they want.
-    val clusterWrite =
-      try spark.conf.get("spark.graft.backup.clusterWrite", "true").toBoolean
-      catch { case scala.util.control.NonFatal(_) => true }
-    val toWrite =
-      if (clusterWrite)
-        projected.repartition(
-          spark.sparkContext.defaultParallelism,
-          cfg.partCols.map(col) :+ to_date(col(cfg.timeColumn)): _*)
-      else projected
-
-    toWrite
+    // Cluster the write by LEAF DIRECTORY (partition columns + the
+    // sink's date_dir day, same session zone). The sink's required
+    // per-task sort is (partCols asc, time desc), so co-locating each
+    // leaf's rows in one task yields the EXACT chunk set a single-task
+    // write produces (same per-dir row order → same maxRecords rolls →
+    // same chunk names) while the gzip/JSON encode — the write's real
+    // CPU — parallelizes across leaves. One writer per leaf also keeps
+    // consecutive chunks time-disjoint (tight zone-map envelopes) and
+    // the file count at O(leaves), not O(leaves × input tasks).
+    projected
+      .repartition(spark.sparkContext.defaultParallelism,
+        cfg.partCols.map(col) :+ to_date(col(cfg.timeColumn)): _*)
       .write.format("graftbackup")
       .mode("overwrite")
       .option("partitionColumns", cfg.partCols.mkString(","))
@@ -128,25 +114,23 @@ object Backup {
       .option("maxRecordsPerChunk", cfg.clampedRows.toString)
       .save(cfg.outputPath)
 
-    // the sink's commit stamped _GRAFT_META.json without coveredTo;
-    // re-stamp with the window end so incremental() can resume
-    writeMeta(spark, cfg)
-    val chunks = graft.sources.BackupSink.takePublished(cfg.outputPath)
+    // the overwrite's commit dropped coveredTo; stamp the window end
+    // so incremental() can resume
+    cover(spark, cfg.outputPath, cfg.to)
+    val chunks = BackupSink.takePublished(cfg.outputPath)
       .map { p =>
         val dirs = p.relDir.split("/").map { seg =>
           val eq = seg.indexOf('=')
           seg.take(eq) -> org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils.unescapePathName(seg.drop(eq + 1))
         }.toMap
-        val (from, to, crc) = p.baseName.split("_") match {
-          case Array(f, t, c) => (f, t, c)
-          case _ => ("", "", "")
-        }
+        val name = ChunkName.parse(new Path(p.path).getName)
         // per-column directory values joined with '/' (a single-column
         // layout keeps the bare value)
         ChunkInfo(p.path,
           cfg.partCols.map(c => dirs.getOrElse(c, null)).mkString("/"),
-          dirs.getOrElse("date_dir", null), from, to, crc, p.rows)
+          dirs.getOrElse("date_dir", null), name.fold("")(_.from),
+          name.fold("")(_.to), name.fold("")(_.crc32), p.rows)
       }
     Result(chunks.groupMapReduce(_.partition)(_.rows)(_ + _), chunks)
   }
@@ -168,60 +152,28 @@ object Backup {
           s"${cfg.maxCollectedPartitions} distinct value tuples; raise " +
           "BackupConfig.maxCollectedPartitions if this is intended")
     val fields = counted.schema.fields.take(cfg.partCols.size)
-    val fmt = graft.sources.BackupSink.lineFormatter(sessionTz(spark))
+    val fmt = BackupSink.lineFormatter(BackupMeta.sessionZone(spark))
     rows.map { r =>
-      fields.indices.map(i =>
-        graft.sources.BackupSink.partitionValue(r, i, fields(i), fmt))
+      fields.indices.map(i => BackupSink.partitionValue(r, i, fields(i), fmt))
         .mkString("/") -> r.getLong(fields.length)
     }.toMap
   }
 
-  /** Driver-side backup metadata stamp, written at the output root. The
-    * leading underscore keeps it invisible to every Spark reader (hidden
-    * file convention), so [[Restore.run]]'s data read never picks it up
-    * as a row.
-    *
-    * `sessionTimeZone` is the load-bearing field: faithful-mode backups
-    * render timestamps as tz-less LOCAL strings, so a restore session in
-    * a different zone would silently shift every timestamp — Restore
-    * checks this stamp and refuses the mismatch (round-5 judge item). */
-  val MetaFile = "_GRAFT_META.json"
-
-  def sessionTz(spark: SparkSession): String =
-    spark.conf.getOption("spark.sql.session.timeZone")
-      .getOrElse(java.util.TimeZone.getDefault.getID)
-
-  /** Minimal JSON string escaper for the metadata stamp: a timezone or
-    * column name containing `"` or `\` (or a control char) must not
-    * produce invalid JSON — Restore parses this file with a real JSON
-    * reader and a malformed stamp would silently skip the timezone
-    * guard. */
-  private[operators] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
+  /** Sets the stamp's `coveredTo` at `root` after a sink commit. */
+  private def cover(spark: SparkSession, root: String,
+                    to: java.time.Instant): Unit =
+    BackupMeta.write(WriteFs.forPath(new Path(root),
+      spark.sparkContext.hadoopConfiguration), new Path(root)) { m =>
+      m.getOrElse(throw new IllegalStateException(
+        s"the commit at $root left no ${BackupMeta.FileName}"))
+        .copy(coveredTo = Some(to))
     }
-
-  private def writeMeta(spark: SparkSession, cfg: BackupConfig): Unit = {
-    val fs = graft.sources.WriteFs.forPath(new Path(cfg.outputPath),
-      spark.sparkContext.hadoopConfiguration)
-    val json =
-      s"""{"sessionTimeZone":"${jsonEscape(sessionTz(spark))}",""" +
-        s""""timeColumn":"${jsonEscape(cfg.timeColumn)}",""" +
-        s""""partitionColumn":"${jsonEscape(cfg.partCols.mkString(","))}",""" +
-        s""""coveredTo":"${cfg.to}"}"""
-    val out = fs.create(new Path(new Path(cfg.outputPath), MetaFile), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Incremental backup — resume an existing backup root up to `newTo`
     * WITHOUT re-reading or rewriting what's already there.
     *
-    * The exact resume point is the `coveredTo` stamp in
-    * `_GRAFT_META.json` (written by [[run]]): the increment is the
+    * The exact resume point is the stamp's `coveredTo`
+    * ([[graft.sources.BackupMeta]], set by [[run]]): the increment is the
     * half-open window (coveredTo, newTo], so repeated incrementals
     * tile the timeline with no duplicates and no holes — chunk names
     * only floor to seconds, which is why the stamp, not the names, is
@@ -237,69 +189,44 @@ object Backup {
     */
   def incremental(spark: SparkSession, inputPath: String, outputRoot: String,
                   newTo: java.time.Instant): Unit = {
-    val fs = graft.sources.WriteFs.forPath(new Path(outputRoot),
-      spark.sparkContext.hadoopConfiguration)
-    val metaPath = new Path(new Path(outputRoot), MetaFile)
-    require(fs.exists(metaPath),
-      s"$outputRoot has no $MetaFile stamp — not an existing backup root")
-    val node = {
-      val in = fs.open(metaPath)
-      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    }
-    def field(n: String): String = {
-      val v = node.get(n)
-      require(v != null && v.isTextual, s"$MetaFile is missing '$n'")
-      v.asText()
-    }
-    val timeCol = field("timeColumn")
-    // comma-joined on write: single- and multi-column layouts alike
-    val partColSpec = field("partitionColumn")
-    val partCols = partColSpec.split(",").map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    val coveredTo = java.time.Instant.parse(field("coveredTo"))
+    val meta = BackupMeta.read(outputRoot).getOrElse(
+      throw new IllegalArgumentException(s"$outputRoot has no " +
+        s"${BackupMeta.FileName} stamp — not an existing backup root"))
+    require(meta.coveredTo.isDefined,
+      s"${BackupMeta.FileName} at $outputRoot is missing 'coveredTo'")
+    val coveredTo = meta.coveredTo.get
     require(coveredTo.isBefore(newTo),
       s"backup already covers $coveredTo >= $newTo — nothing to do")
-    val tz = field("sessionTimeZone")
-    require(tz == sessionTz(spark),
-      s"backup was written in zone $tz, session is ${sessionTz(spark)}")
+    val tz = BackupMeta.sessionZone(spark)
+    require(meta.sessionTimeZone == tz,
+      s"backup was written in zone ${meta.sessionTimeZone}, session is $tz")
 
     // cross-check: no existing chunk name may claim data past coveredTo
     val coveredFloorMicros =
       coveredTo.getEpochSecond * 1000000L + coveredTo.getNano / 1000L
-    graft.sources.BackupSource.layout(outputRoot)._2.foreach { leaf =>
+    BackupSource.layout(outputRoot)._2.foreach { leaf =>
       leaf.files.foreach { f =>
         val name = new Path(f).getName
-        graft.sources.BackupSource.chunkRangeMicros(name).foreach {
-          case (_, hi) =>
-            // hi is exclusive and second-ceiled; data past coveredTo
-            // exists only if hi > coveredTo + 1s
-            require(hi <= coveredFloorMicros + 1000000L,
-              s"chunk $name extends past the coveredTo stamp ($coveredTo) " +
-                "— stamp and data disagree, refusing to append")
+        ChunkName.parse(name).foreach { n =>
+          // the range end is exclusive and second-ceiled; data past
+          // coveredTo exists only if it is > coveredTo + 1s
+          require(n.rangeMicros._2 <= coveredFloorMicros + 1000000L,
+            s"chunk $name extends past the coveredTo stamp ($coveredTo) " +
+              "— stamp and data disagree, refusing to append")
         }
       }
     }
 
     val src = Tables.loadPath(spark, inputPath)
+    val timeCol = meta.timeColumn
     src.filter(col(timeCol) > lit(java.sql.Timestamp.from(coveredTo)) &&
         col(timeCol) <= lit(java.sql.Timestamp.from(newTo)) &&
-        partCols.map(col(_).isNotNull).reduce(_ && _))
+        meta.partitionColumns.map(col(_).isNotNull).reduce(_ && _))
       .write.format("graftbackup").mode("append")
-      .option("partitionColumns", partColSpec)
+      .option("partitionColumns", meta.partitionColumns.mkString(","))
       .option("timeColumn", timeCol)
       .save(outputRoot)
-
-    // the sink's commit rewrote the stamp without coveredTo — re-stamp
-    // with the advanced watermark
-    val json =
-      s"""{"sessionTimeZone":"${jsonEscape(tz)}",""" +
-        s""""timeColumn":"${jsonEscape(timeCol)}",""" +
-        s""""partitionColumn":"${jsonEscape(partColSpec)}",""" +
-        s""""coveredTo":"$newTo"}"""
-    val out = fs.create(metaPath, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    cover(spark, outputRoot, newTo)
   }
 
   /** One chunk file's integrity verdict (see [[fsck]]). `rows` is −1
@@ -308,9 +235,6 @@ object Backup {
                            readable: Boolean, crcOk: Boolean,
                            envelopeOk: Boolean)
 
-  private val chunkNameRe =
-    raw"(\d{8}T\d{6}Z)_(\d{8}T\d{6}Z)_([0-9a-f]{8})(?:-\d+)?\.log(?:\.gz)?".r
-
   // the sink's line format, with the fraction optional
   private val LineTsFmt = new java.time.format.DateTimeFormatterBuilder()
     .appendPattern("yyyy-MM-dd HH:mm:ss")
@@ -318,8 +242,6 @@ object Backup {
     .appendFraction(java.time.temporal.ChronoField.NANO_OF_SECOND, 0, 9, true)
     .optionalEnd()
     .toFormatter()
-
-  private val NameFmt = java.time.format.DateTimeFormatter.ofPattern(FileFmt)
 
   /** Backup FSCK — the audit the reference's chunk naming exists to
     * make possible (`cmd/backup.go:309-321`: the name CARRIES the CRC32
@@ -335,17 +257,17 @@ object Backup {
     * (`readable = false`), not a crash: fsck's job is to report damage,
     * the read path's is to refuse it.
     *
-    * Unparseable names get `crcOk = envelopeOk = false` — a chunk that
-    * lost its name has lost its integrity claim. */
+    * Names off the chunk-name grammar ([[graft.sources.ChunkName]])
+    * get `crcOk = envelopeOk = false` — a chunk that lost its name has
+    * lost its integrity claim. The CRC compares case-insensitively. */
   def fsck(spark: SparkSession, root: String,
            partitionColumn: String): DataFrame = {
-    val (_, leaves) = graft.sources.BackupSource.layout(root)
-    val timeCol = graft.sources.BackupSource.metaTimeColumn(root)
-      .getOrElse("ts")
+    val (_, leaves) = BackupSource.layout(root)
+    val timeCol = BackupMeta.read(root).fold("ts")(_.timeColumn)
     val files: Seq[(String, String)] = leaves.flatMap(l =>
       l.files.map(f => (f, l.values.getOrElse(partitionColumn, null))))
     val sc = spark.sparkContext
-    val conf = graft.sources.HadoopConfs.broadcast()
+    val conf = HadoopConfs.broadcast()
     val rdd = sc
       .parallelize(files,
         math.max(1, math.min(files.size, sc.defaultParallelism)))
@@ -378,7 +300,7 @@ object Backup {
     else {
       var r: java.io.BufferedReader = null
       try {
-        r = graft.sources.BackupSource.reader(path, in)
+        r = BackupSource.reader(path, in)
         var line = r.readLine()
         while (line != null) {
           rows += 1
@@ -406,13 +328,16 @@ object Backup {
       try { if (r != null) r.close() else in.close() }
       catch { case NonFatal(_) => }
     }
-    p.getName match {
-      case chunkNameRe(from, to, hex) =>
-        val crcOk = crcComputed && f"${crc.getValue}%08x" == hex
+    def second(t: java.time.LocalDateTime) = ChunkName.naiveMicros(
+      t.truncatedTo(java.time.temporal.ChronoUnit.SECONDS))
+    ChunkName.parse(p.getName) match {
+      case Some(n) =>
+        val crcOk =
+          crcComputed && n.crc32.equalsIgnoreCase(f"${crc.getValue}%08x")
         val envOk = readable && minT != null &&
-          NameFmt.format(minT) == from && NameFmt.format(maxT) == to
+          second(minT) == n.fromMicros && second(maxT) == n.toMicros
         FsckRow(path, partVal, rows, readable, crcOk, envOk)
-      case _ =>
+      case None =>
         FsckRow(path, partVal, rows, readable, crcOk = false,
           envelopeOk = false)
     }
@@ -431,22 +356,19 @@ object Backup {
     * are removed. Returns the number of chunks deleted. */
   def retentionPrune(spark: SparkSession, root: String,
                      cutoff: java.time.Instant): Long = {
-    val (_, leaves) = graft.sources.BackupSource.layout(root)
+    val (_, leaves) = BackupSource.layout(root)
     val cutoffMicros = java.time.LocalDateTime
       .ofInstant(cutoff, java.time.ZoneOffset.UTC)
       .toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L
-    val fs = graft.sources.WriteFs.forPath(new Path(root),
+    val fs = WriteFs.forPath(new Path(root),
       spark.sparkContext.hadoopConfiguration)
     var deleted = 0L
     leaves.foreach { l =>
       var left = l.files.size
       l.files.foreach { f =>
-        val name = new Path(f).getName
-        graft.sources.BackupSource.chunkRangeMicros(name).foreach {
-          case (_, hiExclusive) =>
-            if (hiExclusive <= cutoffMicros) {
-              if (fs.delete(new Path(f), false)) { deleted += 1; left -= 1 }
-            }
+        ChunkName.parse(new Path(f).getName).foreach { n =>
+          if (n.rangeMicros._2 <= cutoffMicros &&
+              fs.delete(new Path(f), false)) { deleted += 1; left -= 1 }
         }
       }
       if (left == 0 && l.files.nonEmpty) {
@@ -459,10 +381,9 @@ object Backup {
     // deletions invalidate the append-only manifest record log (a
     // future tail's reconcile would plan the pruned chunks); drop it —
     // tails fall back to the walk and the next commit's record resumes
-    // the incremental stream (graft.sources.BackupSink.ManifestDir).
+    // the incremental stream (BackupSink.ManifestDir).
     if (deleted > 0)
-      fs.delete(new Path(root, graft.sources.BackupSink.ManifestDir),
-        true): Unit
+      fs.delete(new Path(root, BackupSink.ManifestDir), true): Unit
     deleted
   }
 }

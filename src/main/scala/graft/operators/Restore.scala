@@ -62,47 +62,20 @@ object Restore {
       when(c === lit(Sentinel), lit(null)).otherwise(c.cast(dt))
   }
 
-  /** Enforce the timezone invariant against the backup's
-    * `_GRAFT_META.json` stamp (absent on pre-stamp backups → no check,
-    * the doc contract applies). Driver-side: one tiny metadata file. */
-  private def checkTimeZone(spark: SparkSession, backupDir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(backupDir), spark.sparkContext.hadoopConfiguration)
-    val metaPath = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(backupDir), Backup.MetaFile)
-    if (fs.exists(metaPath)) {
-      val in = fs.open(metaPath)
-      val content =
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-          out.toString(java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      // Real JSON parse (Jackson, already on the Spark classpath) — a
-      // regex extraction would mis-read a stamp whose values contain
-      // escaped quotes and silently skip the guard. A stamp that fails
-      // to parse is a corrupt metadata file: fail loudly, never skip.
-      val node =
-        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(content)
-        catch {
-          case e: Exception =>
-            throw new IllegalStateException(
-              s"backup metadata ${Backup.MetaFile} at $backupDir is not " +
-                s"valid JSON — refusing to restore without the timezone " +
-                s"guard: ${e.getMessage}")
-        }
-      Option(node.get("sessionTimeZone")).map(_.asText()).foreach { backupTz =>
-        val restoreTz = Backup.sessionTz(spark)
-        require(backupTz == restoreTz,
-          s"backup at $backupDir was written under session timezone " +
-            s"'$backupTz' but this session is '$restoreTz'; restoring " +
-            "would silently shift every timestamp — set " +
-            s"spark.sql.session.timeZone=$backupTz to restore")
-      }
+  /** Enforce the timezone invariant against the backup's stamp
+    * ([[graft.sources.BackupMeta]]; absent on pre-stamp backups → no
+    * check, the doc contract applies). A malformed stamp fails the
+    * restore: never skip the guard. Driver-side: one tiny file. */
+  private def checkTimeZone(spark: SparkSession, backupDir: String): Unit =
+    graft.sources.BackupMeta.read(backupDir).foreach { meta =>
+      val backupTz = meta.sessionTimeZone
+      val restoreTz = graft.sources.BackupMeta.sessionZone(spark)
+      require(backupTz == restoreTz,
+        s"backup at $backupDir was written under session timezone " +
+          s"'$backupTz' but this session is '$restoreTz'; restoring " +
+          "would silently shift every timestamp — set " +
+          s"spark.sql.session.timeZone=$backupTz to restore")
     }
-  }
 
   /** Read a [[Backup]] output tree (faithfulStrings mode) back into the
     * typed `target` schema and write it as parquet at `outputPath`.
@@ -119,8 +92,8 @@ object Restore {
     * (Stringify's cast) and the `to_timestamp` here re-parses them in
     * the CURRENT session zone — restoring under a different zone would
     * silently shift every timestamp by the zone delta. [[Backup]] stamps
-    * its session zone into `_GRAFT_META.json` at the output root and
-    * this method `require`s equality (failing loudly beats shifting
+    * its session zone at the output root ([[graft.sources.BackupMeta]])
+    * and this method `require`s equality (failing loudly beats shifting
     * silently). Backups predating the stamp fall back to the old
     * doc-only contract: pin the zone in both deployments.
     */

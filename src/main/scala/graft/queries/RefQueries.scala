@@ -307,7 +307,7 @@ object RefQueries {
     // incremental backup — the reason the reference encodes
     // <fromTS>_<toTS> into chunk names at all: resume a backup root up
     // to a new end time touching ONLY the increment. The exact resume
-    // point is the coveredTo stamp in _GRAFT_META.json (names floor to
+    // point is the root stamp's coveredTo (BackupMeta; names floor to
     // seconds and are used as a cross-check, not the authority); the
     // increment ships through the DSv2 sink's append mode. Base window
     // + incremental extension must equal one full-window backup — the

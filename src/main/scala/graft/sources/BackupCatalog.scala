@@ -29,7 +29,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * unchanged because `loadTable` returns the same [[BackupTable]] the
   * path-based reader builds. `INSERT INTO` works without options: the
   * write config (partition/time columns) is recovered from the table's
-  * own `_GRAFT_META.json` stamp (see [[BackupTable.newWriteBuilder]]).
+  * own stamp, [[BackupMeta]] (see [[BackupTable.newWriteBuilder]]).
   */
 class BackupCatalog extends TableCatalog with SupportsNamespaces
     with FunctionCatalog {
@@ -86,12 +86,10 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
       // Empty root (just created, or truncated): disk can't speak yet,
       // so the CREATE-time stamp is the schema authority — without it a
       // positional INSERT INTO has no column names to resolve against.
-      val declared = BackupSource.metaCreateSchema(path)
-      val partCols = BackupSource.metaPartitionColumns(path)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(diskPartCols)
+      val meta = BackupMeta.read(path)
+      val partCols = meta.fold(diskPartCols)(_.partitionColumns)
       new BackupTable(path,
-        declared.getOrElse(StructType(
+        meta.flatMap(_.createSchema).getOrElse(StructType(
           partCols.map(StructField(_, StringType)))), partCols)
     }
   }
@@ -100,11 +98,11 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
     * (ACCEPT_ANY_SCHEMA, as the path-based writer): inference over
     * what lands on disk is the truth. PARTITIONED BY identity
     * transforms and a `timeColumn` table property ARE honored (round-8
-    * advisor item): they stamp `_GRAFT_META.json` at create time, so a
-    * later `INSERT INTO` recovers the declared write contract instead
-    * of silently producing an unpartitioned table. Non-identity
-    * transforms (bucket/days/…) have no meaning in the reference chunk
-    * layout and are refused loudly. */
+    * advisor item): they stamp the root ([[BackupMeta]]) at create
+    * time, so a later `INSERT INTO` recovers the declared write
+    * contract instead of silently producing an unpartitioned table.
+    * Non-identity transforms (bucket/days/…) have no meaning in the
+    * reference chunk layout and are refused loudly. */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): Table = {
@@ -121,22 +119,13 @@ class BackupCatalog extends TableCatalog with SupportsNamespaces
             s"(directory layout), got $t")
       refs(0).fieldNames()(0)
     }.filterNot(_ == "date_dir") // derived by the sink, never declared
-    val timeCol = Option(properties.get("timeColumn"))
+    val timeCol = Option(properties.get("timeColumn")).getOrElse("ts")
     writeFs.mkdirs(dir): Unit
-    val zone = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.sql.session.timeZone")
-      .getOrElse(java.util.TimeZone.getDefault.getID)
     // Stamp the declared contract (and full schema — the authority for
     // the empty table until data lands) so INSERT INTO recovers it.
-    val e = BackupSink.jsonEscape _
-    val json =
-      s"""{"sessionTimeZone":"${e(zone)}",""" +
-        s""""timeColumn":"${e(timeCol.getOrElse("ts"))}",""" +
-        s""""partitionColumn":"${e(partCols.mkString(","))}",""" +
-        s""""createSchema":"${e(schema.json)}"}"""
-    val out = writeFs.create(new Path(dir, "_GRAFT_META.json"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val zone = BackupMeta.sessionZone(org.apache.spark.sql.SparkSession.active)
+    BackupMeta.write(writeFs, dir)(_ =>
+      BackupMeta(zone, timeCol, partCols, createSchema = Some(schema)))
     new BackupTable(dir.toString, schema, partCols)
   }
 
@@ -281,13 +270,13 @@ object BackupCatalog {
     }
   }
 
-  /** The chunk-name timestamp layout (`cmd/backup.go:25-28`): UTC
-    * second-floored `yyyyMMdd'T'HHmmss'Z'`. */
+  /** The chunk-name timestamp layout (`cmd/backup.go:25-28`) in UTC:
+    * [[graft.sources.ChunkName.stamp]]. */
   private object ChunkStamp extends UnboundFunction {
     override def name(): String = "chunk_stamp"
     override def description(): String =
-      "chunk_stamp(ts TIMESTAMP): the chunk-name stamp " +
-        "(UTC, floored to seconds, yyyyMMdd'T'HHmmss'Z')"
+      "chunk_stamp(ts TIMESTAMP): the chunk-name stamp of ts " +
+        "(UTC, floored to seconds)"
     override def bind(inputType: StructType): BoundFunction = {
       require(inputType.fields.length == 1 &&
         inputType.fields(0).dataType == TimestampType,
@@ -297,16 +286,10 @@ object BackupCatalog {
         override def resultType(): DataType = StringType
         override def name(): String = "chunk_stamp"
         override def canonicalName(): String = "graft.fns.chunk_stamp"
-        private lazy val fmt = java.time.format.DateTimeFormatter
-          .ofPattern("yyyyMMdd'T'HHmmss'Z'")
-          .withZone(java.time.ZoneOffset.UTC)
         override def produceResult(input: InternalRow): UTF8String =
           if (input.isNullAt(0)) null
-          else {
-            val micros = input.getLong(0)
-            UTF8String.fromString(fmt.format(
-              java.time.Instant.EPOCH.plusNanos(micros * 1000L)))
-          }
+          else UTF8String.fromString(
+            ChunkName.stamp(input.getLong(0), java.time.ZoneOffset.UTC))
       }
     }
   }

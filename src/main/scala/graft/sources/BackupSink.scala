@@ -40,9 +40,8 @@ import org.apache.spark.sql.types._
   *  - **Modes**: append adds chunks next to existing ones (collision
   *    names get a `-seq` suffix, as the batch finalizer does);
   *    overwrite (`SupportsTruncate`) clears existing partition
-  *    directories first. The `_GRAFT_META.json` timezone stamp is
-  *    (re)written on every commit so [[graft.operators.Restore]]'s
-  *    timezone guard works on connector-written backups too.
+  *    directories first. Every commit merges its fields into the
+  *    root's stamp ([[BackupMeta]], see [[BackupSink.writeMeta]]).
   *
   * Options: `partitionColumns` (comma-separated, required), `timeColumn`
   * (required — drives `date_dir` and chunk naming), `gzip` (default
@@ -52,7 +51,6 @@ import org.apache.spark.sql.types._
   * ([[BackupSource]]) expects.
   */
 object BackupSink {
-  val FileFmt = "yyyyMMdd'T'HHmmss'Z'"
   val LineTsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
   val DefaultMaxRecords = 1000
 
@@ -217,9 +215,9 @@ object BackupSink {
 
   /** Choose collision-free destination names for every staged chunk
     * BEFORE any rename happens: the usual `<base>.log.gz` name, with a
-    * `-seq` suffix where an identical name already exists on disk (a
-    * previous append of duplicate content) or is taken by another chunk
-    * of this same commit. Driver cost is one listStatus per AFFECTED
+    * `-seq` suffix ([[ChunkName.fileName]]) where an identical name
+    * already exists on disk (a previous append of duplicate content) or
+    * is taken by another chunk of this same commit. Driver cost is one listStatus per AFFECTED
     * leaf directory plus an in-memory set walk — it scales with leaf
     * count, not chunk count (the per-chunk exists() probe it replaces
     * was O(#chunks) driver RPCs). Because the full list exists before
@@ -229,7 +227,6 @@ object BackupSink {
   def planDestinations(fs: org.apache.hadoop.fs.FileSystem,
                        rootPath: Path, cfg: Config,
                        chunks: Seq[StagedChunk]): Seq[Path] = {
-    val ext = if (cfg.gzip) ".log.gz" else ".log"
     val taken = mutable.HashMap.empty[String, mutable.HashSet[String]]
     chunks.map(_.relDir).distinct.foreach { rel =>
       val names = mutable.HashSet.empty[String]
@@ -241,13 +238,13 @@ object BackupSink {
     }
     chunks.map { c =>
       val names = taken(c.relDir)
-      var name = c.baseName + ext
       var seq = 0
+      var name = ChunkName.fileName(c.baseName, seq, cfg.gzip)
       while (names.contains(name)) {
         seq += 1
         if (seq > 1000) throw new java.io.IOException(
           s"cannot find a free name for chunk ${c.stagedPath}")
-        name = s"${c.baseName}-$seq$ext"
+        name = ChunkName.fileName(c.baseName, seq, cfg.gzip)
       }
       names += name
       new Path(new Path(rootPath, c.relDir), name)
@@ -433,18 +430,16 @@ object BackupSink {
     records.foreach(st => fs.delete(st.getPath, false): Unit)
   }
 
-  /** Restore's timezone guard reads this stamp (Backup.MetaFile). */
-  def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-                rootPath: Path, cfg: Config): Unit = {
-    val meta = new Path(rootPath, "_GRAFT_META.json")
-    val json =
-      s"""{"sessionTimeZone":"${jsonEscape(cfg.zone)}",""" +
-        s""""timeColumn":"${jsonEscape(cfg.timeCol)}",""" +
-        s""""partitionColumn":"${jsonEscape(cfg.partCols.mkString(","))}"}"""
-    val out = fs.create(meta, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  /** Merges this write's zone, time and partition columns into the
+    * root's stamp. `createSchema` survives every commit and `coveredTo`
+    * every append; an overwrite drops `coveredTo`, whose data it
+    * replaced. An unchanged stamp is not rewritten. */
+  def writeMeta(fs: FileSystem, rootPath: Path, cfg: Config): Unit =
+    BackupMeta.write(fs, rootPath) { old =>
+      BackupMeta(cfg.zone, cfg.timeCol, cfg.partCols,
+        old.flatMap(_.coveredTo).filterNot(_ => cfg.truncate),
+        old.flatMap(_.createSchema))
+    }
 }
 
 class BackupWriteBuilder(schema: StructType, options: java.util.Map[String, String])
@@ -485,9 +480,7 @@ class BackupWriteBuilder(schema: StructType, options: java.util.Map[String, Stri
       require(BackupSink.encodable(f.dataType),
         s"graftbackup cannot encode column ${f.name} of type ${f.dataType}")
     }
-    val zone = SparkSession.active.conf
-      .getOption("spark.sql.session.timeZone")
-      .getOrElse(java.util.TimeZone.getDefault.getID)
+    val zone = BackupMeta.sessionZone(SparkSession.active)
     val cfg = Config(root, partCols, timeCol,
       gzip = opt("gzip").forall(_.toBoolean),
       maxRows = opt("maxRecordsPerChunk").map(_.toInt)
@@ -542,13 +535,13 @@ class BackupBatchWrite(cfg: BackupSink.Config, schema: StructType)
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fs = WriteFs.forPath(new Path(cfg.root), cfg.hadoop.value)
     val rootPath = new Path(cfg.root)
+    // first, so a malformed stamp fails the commit before any change
+    BackupSink.writeMeta(fs, rootPath, cfg)
     if (cfg.truncate) {
       // overwrite: clear existing partition directories (and stale
       // staging trees from dead queries), keep this query's staging
       Option(fs.listStatus(rootPath)).getOrElse(Array.empty).foreach { st =>
-        val n = st.getPath.getName
-        val isOurs = n == s"_staging_${cfg.queryId}"
-        if (!isOurs && (st.isDirectory || n == "_GRAFT_META.json"))
+        if (st.isDirectory && st.getPath.getName != s"_staging_${cfg.queryId}")
           fs.delete(st.getPath, true): Unit
       }
     }
@@ -567,7 +560,6 @@ class BackupBatchWrite(cfg: BackupSink.Config, schema: StructType)
     if (fresh) BackupSink.writeCompleteStamp(fs, rootPath)
     BackupSink.maybeCompactManifest(fs, rootPath)
     BackupSink.recordPublished(cfg.root, published)
-    BackupSink.writeMeta(fs, rootPath, cfg)
     fs.delete(new Path(cfg.stagingDir), true): Unit
   }
 
@@ -750,8 +742,6 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
   private val zone = java.time.ZoneId.of(cfg.zone)
   private val dayFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyyMMdd").withZone(zone)
-  private val nameFmt = java.time.format.DateTimeFormatter
-    .ofPattern(FileFmt).withZone(zone)
   private val lineFmt = lineFormatter(cfg.zone)
 
   /** Counts final on-disk bytes below the CRC/gzip chain, so the
@@ -789,10 +779,8 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
 
     def finish(): StagedChunk = {
       out.close() // flushes gzip trailer through the CRC stream
-      def fmt(us: Long) =
-        nameFmt.format(java.time.Instant.EPOCH.plusNanos(us * 1000L))
       StagedChunk(staged.toString, relDir,
-        s"${fmt(minTs)}_${fmt(maxTs)}_${f"${crc.getValue}%08x"}", rows,
+        ChunkName.format(minTs, maxTs, crc.getValue, zone), rows,
         counter.count)
     }
   }

@@ -23,8 +23,8 @@ import org.apache.spark.util.SerializableConfiguration
 /** DataSource V2 connector for the backup sink's on-disk format
   * (`graft.operators.Backup`): Hive-style partition directories
   * (`<partCol>=<v>/date_dir=<yyyyMMdd>/`) holding gz-NDJSON chunk files
-  * named `<fromTS>_<toTS>_<crc32>.log.gz` (the reference's layout,
-  * cmd/backup.go:311-313).
+  * named `<fromTS>_<toTS>_<crc32>.log.gz` ([[ChunkName]]; the
+  * reference's layout, cmd/backup.go:311-313).
   *
   * `spark.read.format("graftbackup").load(dir)` — registered via the
   * `DataSourceRegister` service file, so the short name works anywhere
@@ -331,49 +331,6 @@ object BackupSource {
     manifestView(root).map { case (pc, leaves, _) => (pc, leaves) }
       .getOrElse(layout(root))
 
-  /** Time column recorded in the backup's `_GRAFT_META.json` stamp
-    * (written by both the batch Backup and the DSv2 sink). Absent or
-    * unreadable stamp → None, and chunk-name pruning is simply off. */
-  def metaTimeColumn(root: String): Option[String] =
-    metaField(root, "timeColumn")
-
-  /** Partition column(s) from the meta stamp (comma-joined on write). */
-  def metaPartitionColumns(root: String): Option[String] =
-    metaField(root, "partitionColumn")
-
-  /** CREATE-time declared schema from the meta stamp (written by the
-    * catalog's createTable) — the schema authority while the root has
-    * no data to infer from. */
-  def metaCreateSchema(root: String): Option[org.apache.spark.sql.types.StructType] =
-    metaField(root, "createSchema").flatMap { j =>
-      try Some(org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None }
-    }
-
-  private def metaField(root: String, field: String): Option[String] =
-    try {
-      val p = new Path(root, "_GRAFT_META.json")
-      val fs = p.getFileSystem(HadoopConfs.active())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val node = try new ObjectMapper().readTree(in) finally in.close()
-        Option(node.get(field)).filter(_.isTextual).map(_.asText())
-      }
-    } catch { case _: Exception => None }
-
-  // <fromTS>_<toTS>_<crc32>[_seq].log[.gz] — the reference's chunk
-  // naming (cmd/backup.go:311-313). from/to are the SECOND-floored
-  // min/max of the chunk's time column, rendered in the writing
-  // session's zone, so every row's naive-local micros lie in
-  // [from*1e6, (to+1)*1e6).
-  // suffix: the sink's publish disambiguates duplicate-content name
-  // collisions with `-N` (a legacy finalize pass used `_N`) — accept both
-  private val ChunkNameRe =
-    """(\d{8}T\d{6})Z_(\d{8}T\d{6})Z_[0-9a-fA-F]{8}(?:[-_]\d+)?\.log(?:\.gz)?""".r
-  private val chunkFmt =
-    java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss")
   // The sink's line format with an optional 0–6 digit fraction: accepts
   // both the fixed-width sink output and a user-typed comparison bound
   // like "2024-01-10 06:00:00".
@@ -384,46 +341,22 @@ object BackupSource {
     .optionalEnd()
     .toFormatter
 
-  private def naiveMicros(ldt: java.time.LocalDateTime): Long =
-    ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-      ldt.getNano / 1000L
-
-  /** Raw (from, to) name stamps of a conventional chunk name, e.g.
-    * ("20240105T000000Z", "20240107T235958Z"); None off-convention. */
-  def chunkNameParts(fileName: String): Option[(String, String)] =
-    fileName match {
-      case ChunkNameRe(from, to) => Some((from + "Z", to + "Z"))
-      case _ => None
-    }
-
-  /** [fromMicros, toMicrosExclusive) covered by a chunk file name, in
-    * naive-local micros; None for names that don't follow the chunk
-    * convention (those are never skipped). */
-  def chunkRangeMicros(fileName: String): Option[(Long, Long)] =
-    fileName match {
-      case ChunkNameRe(from, to) =>
-        try {
-          val lo = naiveMicros(java.time.LocalDateTime.parse(from, chunkFmt))
-          val hi = naiveMicros(java.time.LocalDateTime.parse(to, chunkFmt)) +
-            1000000L
-          Some((lo, hi))
-        } catch { case _: java.time.format.DateTimeParseException => None }
-      case _ => None
-    }
-
   /** Parse a pushed comparison bound (the time column is a STRING in
-    * the inferred schema, so filter values arrive as strings). */
+    * the inferred schema, so filter values arrive as strings) into the
+    * naive-local micros of [[ChunkName.rangeMicros]]. */
   def boundMicros(v: Any): Option[Long] = v match {
     case s: String =>
-      try Some(naiveMicros(java.time.LocalDateTime.parse(s, boundFmt)))
+      try Some(ChunkName.naiveMicros(
+        java.time.LocalDateTime.parse(s, boundFmt)))
       catch { case _: java.time.format.DateTimeParseException => None }
     case _ => None
   }
 
   /** Conservative zone-map test: false ONLY when no row in the chunk's
-    * [lo, hi) envelope can satisfy the filter — the exact predicate is
-    * still re-evaluated by Spark post-scan (these filters are returned
-    * as residual), so the only burden here is soundness of the skip.
+    * [lo, hi) envelope ([[ChunkName.rangeMicros]]) can satisfy the
+    * filter — the exact predicate is still re-evaluated by Spark
+    * post-scan (these filters are returned as residual), so the only
+    * burden here is soundness of the skip.
     * `>` is treated as `>=` and `<` as `<=` at the boundary: the name
     * is second-floored while values carry micros, so equality at a
     * bound can't justify a skip. */
@@ -556,8 +489,8 @@ class BackupTable(path: String, tableSchema: StructType,
     * an append-only chunk log is a different operation
     * ([[graft.operators.Merge]] is that path). `TRUNCATE TABLE` rides
     * the same interface (empty filter array = every leaf matches) and
-    * keeps `_GRAFT_META.json`, so the write contract survives the
-    * truncate. */
+    * keeps the root's stamp ([[BackupMeta]]), so the write contract
+    * survives the truncate. */
   private val partSet = partCols.toSet
 
   private def deletable(f: Filter): Boolean = f match {
@@ -643,16 +576,16 @@ class BackupTable(path: String, tableSchema: StructType,
     val opts = new java.util.HashMap[String, String](info.options())
     if (!opts.containsKey("path")) opts.put("path", path)
     // Catalog writes (INSERT INTO graft.ns.tbl) carry no reader
-    // options: recover the write contract from the table's own
-    // _GRAFT_META.json stamp, so an existing backup accepts appends
-    // with zero configuration. A fresh CTAS-style target still needs
-    // explicit options (nothing on disk to learn from).
-    if (!opts.containsKey("partitioncolumns"))
-      BackupSource.metaPartitionColumns(path)
-        .foreach(v => opts.put("partitioncolumns", v))
-    if (!opts.containsKey("timecolumn"))
-      BackupSource.metaTimeColumn(path)
-        .foreach(v => opts.put("timecolumn", v))
+    // options: recover the write contract from the table's own stamp,
+    // so an existing backup accepts appends with zero configuration. A
+    // fresh CTAS-style target still needs explicit options (nothing on
+    // disk to learn from).
+    if (!opts.containsKey("partitioncolumns") ||
+        !opts.containsKey("timecolumn"))
+      BackupMeta.read(path).foreach { m =>
+        opts.putIfAbsent("partitioncolumns", m.partitionColumns.mkString(","))
+        opts.putIfAbsent("timecolumn", m.timeColumn)
+      }
     new BackupWriteBuilder(info.schema(), opts)
   }
 }
@@ -676,10 +609,11 @@ class BackupScanBuilder(path: String, full: StructType, partCols: Seq[String])
   private var limit: Option[Int] = None
   private var topN: Option[TopNSpec] = None
 
-  /** The backup's time column, from the `_GRAFT_META.json` stamp —
-    * range predicates on it prune whole chunk files by the
-    * `<fromTS>_<toTS>` envelope in their names. */
-  private lazy val timeCol: Option[String] = metaTimeColumn(path)
+  /** The backup's time column, from the root's stamp — range
+    * predicates on it prune whole chunk files by the `<fromTS>_<toTS>`
+    * envelope in their names. No stamp turns that pruning off. */
+  private lazy val timeCol: Option[String] =
+    BackupMeta.read(path).map(_.timeColumn)
 
   /** A filter is absorbable iff it references only partition columns
     * AND has a shape we evaluate exactly against directory values —
@@ -906,8 +840,8 @@ trait BackupPlanning { self: Scan =>
   protected def keepFile(file: String): Boolean =
     timeCol.isEmpty || timeFilters.isEmpty || {
       val name = new Path(file).getName
-      chunkRangeMicros(name).forall(r =>
-        chunkMayMatch(r, timeCol.get, timeFilters.toSeq))
+      ChunkName.parse(name).forall(n =>
+        chunkMayMatch(n.rangeMicros, timeCol.get, timeFilters.toSeq))
     }
 
   /** The session's Hadoop conf for this scan's tasks: broadcast once
@@ -1538,9 +1472,8 @@ class BackupPartitionReader(p: BackupFilePartition, required: StructType,
         Left(if (p.file == null) null else UTF8String.fromString(p.file))
       } else if (f.name == "_chunk_from" || f.name == "_chunk_to") {
         val name = if (p.file == null) "" else new Path(p.file).getName
-        val v = BackupSource.chunkNameParts(name)
-          .map(parts =>
-            if (f.name == "_chunk_from") parts._1 else parts._2)
+        val v = ChunkName.parse(name)
+          .map(n => if (f.name == "_chunk_from") n.from else n.to)
           .orNull
         Left(if (v == null) null else UTF8String.fromString(v))
       } else Right((f.name, f.dataType))

@@ -8,6 +8,8 @@ import java.time.Instant
 import java.util.zip.{CRC32, GZIPInputStream, GZIPOutputStream}
 
 import graft.SparkTestBase
+import graft.config.BackupConfig
+import graft.sources.{BackupScan, ChunkName}
 
 /** Fault verdicts of [[Backup.fsck]]'s single read per chunk: the CRC
   * covers every byte of a chunk whether or not it decodes. */
@@ -77,8 +79,8 @@ class FsckFaultSpec extends SparkTestBase {
       // the failure comes early: most bytes are read only by the drain
       assert(bytes.length > 4 * 8192, s"${bytes.length} bytes")
       val crc = new CRC32(); crc.update(bytes)
-      val Array(from, to, _) = f.getName.stripSuffix(".log.gz").split("_")
-      rewrite(f, bytes, f"${from}_${to}_${crc.getValue}%08x.log.gz")
+      val name = ChunkName.parse(f.getName).get
+      rewrite(f, bytes, f"${name.from}_${name.to}_${crc.getValue}%08x.log.gz")
     }
 
     val verdicts = Backup.fsck(spark, root, "event_type").collect()
@@ -94,5 +96,54 @@ class FsckFaultSpec extends SparkTestBase {
     chunks.drop(2).foreach { f =>
       assert(verdicts(f.getName) == ((1000L, true, true, true)), f.getName)
     }
+  }
+
+  test("a -1 collision-suffixed chunk from a duplicate-content append " +
+    "passes fsck and is pruned by its name's envelope") {
+    import spark.implicits._
+    val t0 = Instant.parse("2024-02-01T00:00:00Z")
+    val rows = (0 until 20).map(i =>
+      (i.toLong, "a", Timestamp.from(t0.plusSeconds(i.toLong))))
+      .toDF("event_id", "event_type", "ts").coalesce(1)
+    val root = Files.createTempDirectory("graft_fsck_dup").toString
+    Seq("overwrite", "append").foreach { mode =>
+      rows.write.format("graftbackup").mode(mode)
+        .option("partitionColumns", "event_type")
+        .option("timeColumn", "ts").save(root)
+    }
+    val names = chunkFiles(root).map(_.getName)
+    assert(names.size == 2 && names.exists(_.endsWith("-1.log.gz")), names)
+    assert(names.map(n => ChunkName.parse(n).get).distinct.size == 1,
+      "identical content must give one name, the second suffixed")
+    val verdicts = Backup.fsck(spark, root, "event_type").collect()
+    assert(verdicts.length == 2 && verdicts.forall(r =>
+      r.getLong(2) == 20L && r.getBoolean(3) && r.getBoolean(4) &&
+        r.getBoolean(5)), verdicts.mkString("\n"))
+    def planned(pred: String): Int = {
+      val df = spark.read.format("graftbackup").load(root).filter(pred)
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan.asInstanceOf[BackupScan].planInputPartitions().length
+      }.sum
+    }
+    assert(planned("ts >= '2024-02-01 00:00:10'") == 2)
+    assert(planned("ts >= '2024-02-01 00:00:20'") == 0)
+  }
+
+  test("Backup.run's ChunkInfo carries the parse of each published name") {
+    val root = Files.createTempDirectory("graft_fsck_info").toString
+    val res = Backup.run(spark, BackupConfig(
+      inputPath = s"$sf0001/events.parquet", outputPath = root,
+      timeColumn = "ts", partitionColumn = "event_type",
+      from = Instant.parse("2024-01-05T00:00:00Z"),
+      to = Instant.parse("2024-01-12T00:00:00Z")))
+    assert(res.chunks.nonEmpty)
+    res.chunks.foreach { c =>
+      val n = ChunkName.parse(new File(c.path).getName)
+      assert(n.map(n => (n.from, n.to, n.crc32)) ==
+        Some((c.fromTs, c.toTs, c.crc32)), c)
+    }
+    assert(res.chunks.map(c => new File(c.path).getName).sorted ==
+      chunkFiles(root).map(_.getName).sorted)
   }
 }

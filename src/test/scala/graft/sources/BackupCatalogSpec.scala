@@ -171,6 +171,22 @@ class BackupCatalogSpec extends SparkTestBase {
       fns.exists(_.endsWith("chunk_stamp")), s"listing missing: $fns")
   }
 
+  test("a zero-row INSERT INTO keeps the CREATE TABLE schema: the " +
+    "commit merges into the stamp") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ddl0")
+    spark.sql(
+      """CREATE TABLE graft.ddl0.empty (event_id BIGINT, ts TIMESTAMP,
+        |  event_type STRING) USING graftbackup PARTITIONED BY (event_type)
+        |TBLPROPERTIES ('timeColumn' = 'ts')""".stripMargin)
+    spark.sql(
+      """INSERT INTO graft.ddl0.empty
+        |SELECT id AS event_id, TIMESTAMP '2024-03-01 10:00:00' AS ts,
+        |       'click' AS event_type FROM range(0)""".stripMargin)
+    assert(spark.table("graft.ddl0.empty").schema.fieldNames.toSeq ==
+      Seq("event_id", "ts", "event_type"))
+  }
+
   test("DDL: create/rename/drop table and namespace map to directories") {
     warehouse
     spark.sql("CREATE NAMESPACE graft.staging")

@@ -354,6 +354,27 @@ class BackupSinkSpec extends SparkTestBase {
       events.filter($"event_id" % 10 === 0).count())
   }
 
+  test("an append merges into the stamp: Backup.run's coveredTo " +
+    "survives a plain append and incremental resumes after it") {
+    val dir = freshDir()
+    val mid = java.time.Instant.parse("2024-01-15T00:00:00Z")
+    graft.operators.Backup.run(spark, graft.config.BackupConfig(
+      inputPath = s"$sf0001/events.parquet", outputPath = dir,
+      timeColumn = "ts", partitionColumn = "event_type",
+      from = java.time.Instant.parse("2024-01-05T00:00:00Z"), to = mid))
+    // rows inside the covered window, appended without the operator
+    events.filter($"ts" < lit("2024-01-10 00:00:00").cast("timestamp") &&
+        $"event_type".isNotNull).limit(10)
+      .write.format("graftbackup").mode("append")
+      .option("partitionColumns", "event_type")
+      .option("timeColumn", "ts").save(dir)
+    assert(BackupMeta.read(dir).flatMap(_.coveredTo).contains(mid))
+    val to = java.time.Instant.parse("2024-01-25T00:00:00Z")
+    graft.operators.Backup.incremental(spark, s"$sf0001/events.parquet",
+      dir, to)
+    assert(BackupMeta.read(dir).flatMap(_.coveredTo).contains(to))
+  }
+
   test("timezone meta stamp is written so Restore's guard applies to " +
     "connector backups") {
     val dir = freshDir()

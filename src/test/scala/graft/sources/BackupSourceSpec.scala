@@ -238,7 +238,8 @@ class BackupSourceSpec extends SparkTestBase {
     // seconds, so the chunk must survive and Spark's residual filter
     // must trim the rows exactly.
     import BackupSource._
-    val r = chunkRangeMicros("20240110T050607Z_20240110T070000Z_deadbeef.log.gz")
+    val r = ChunkName.parse("20240110T050607Z_20240110T070000Z_deadbeef.log.gz")
+      .map(_.rangeMicros)
     assert(r.isDefined)
     val (loM, hiM) = r.get
     // bound just above the floored start: rows in [start, bound) would
@@ -252,6 +253,37 @@ class BackupSourceSpec extends SparkTestBase {
       Seq(org.apache.spark.sql.sources.LessThan("ts", "2024-01-10 05:06:07"))))
     assert(!chunkMayMatch((loM, hiM), "ts",
       Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("ts", "2024-01-10 07:00:01"))))
+  }
+
+  test("chunk names: format and parse round-trip, in the writer's zone") {
+    def micros(s: String) = {
+      val t = java.time.Instant.parse(s)
+      t.getEpochSecond * 1000000L + t.getNano / 1000L
+    }
+    val (lo, hi) = (micros("2024-01-10T05:06:07.654321Z"),
+      micros("2024-01-10T07:00:00.999999Z"))
+    val utc = ChunkName.format(lo, hi, 0xdeadbeefL, java.time.ZoneOffset.UTC)
+    assert(utc == "20240110T050607Z_20240110T070000Z_deadbeef")
+    // the stamps are naive local time in the writing session's zone
+    assert(ChunkName.format(lo, hi, 0xbeefL, java.time.ZoneId.of("Asia/Tokyo"))
+      == "20240110T140607Z_20240110T160000Z_0000beef")
+    val want = ChunkName("20240110T050607Z", "20240110T070000Z", "deadbeef",
+      micros("2024-01-10T05:06:07Z"), micros("2024-01-10T07:00:00Z"))
+    for (seq <- Seq(0, 1, 12); gzip <- Seq(true, false)) {
+      val name = ChunkName.fileName(utc, seq, gzip)
+      assert(ChunkName.parse(name).contains(want), name)
+    }
+    assert(ChunkName.fileName(utc, 1, gzip = true) ==
+      "20240110T050607Z_20240110T070000Z_deadbeef-1.log.gz")
+    assert(want.rangeMicros == ((want.fromMicros, want.toMicros + 1000000L)))
+    // read-side tolerances: a legacy `_n` suffix, upper-case hex
+    assert(ChunkName.parse(utc.toUpperCase + "_3.log").map(_.crc32)
+      .contains("DEADBEEF"))
+    // off the grammar or impossible: never trusted by name
+    Seq("20240110T050607Z_20240110T070000Z_deadbee.log.gz",
+      "20240110T050607Z_20240110T070000Z_deadbeef.json",
+      "20241310T050607Z_20241310T070000Z_deadbeef.log.gz",
+      "part-00000.log.gz").foreach(n => assert(ChunkName.parse(n).isEmpty, n))
   }
 
   test("runtime (DPP-style) In filter prunes directories after planning") {

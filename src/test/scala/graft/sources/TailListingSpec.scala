@@ -316,7 +316,7 @@ class TailListingSpec extends SparkTestBase {
       new org.apache.hadoop.fs.Path(p.file).getName).toSet
     all.map(_.asInstanceOf[BackupFilePartition]).foreach { p =>
       val name = new org.apache.hadoop.fs.Path(p.file).getName
-      BackupSource.chunkRangeMicros(name).foreach { case (_, hi) =>
+      ChunkName.parse(name).map(_.rangeMicros).foreach { case (_, hi) =>
         if (plannedNames.contains(name))
           assert(hi > boundUs, s"planned a chunk outside the window: $name")
         else
