@@ -1,36 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // graft plan tier active at SESSION BUILD (strategy + TopKRewrite
-      // + graft_* functions), not via per-query enableRewrite calls: a
-      // mid-suite activation would make every later window-rank plan
-      // depend on suite execution order (r13 verdict #1) — with the
-      // extension here, the plan each query gets is the plan a
-      // fresh-session library user gets (PlanDeterminismSpec pins it).
-      .withExtensions(new graft.plans.GraftSparkExtensions())
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: runtime SMJ→shuffled-hash conversion for build
-      // sides past the broadcast threshold (see Bench.scala rationale)
-      .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", "128m")
-      // match Bench: scale-aware AQE pre-coalesce width (cpu floor at
-      // oracle scale — identical plans; wide at probe scale)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Bench.derivedInitialPartitions(sfDir, cpus.toInt).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // no .crc sidecars on local writes (halves the per-file forked
-    // chmod cost of a libhadoop-less container — Bench.scala scaladoc)
-    Bench.disableLocalChecksumSidecars(spark)
+    val spark = DriverSession.build(sfDir).spark
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver never sets it): re-dump only the
     // queries matching the regex; older dumps in outDir stay valid.
@@ -54,14 +29,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop per-query state (caches, streaming memory-sink views) so
-      // queries don't run under the accumulated weight of earlier ones
-      try {
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary)
-          .foreach(t => spark.catalog.dropTempView(t.name))
-      } catch { case _: Throwable => () }
+      DriverSession.resetQueryState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Spark's `from_json` (JsonToStructs) is `CodegenFallback`: every row
   * pays interpreted-eval dispatch plus a Jackson parser pull — the r6
-  * sf1 campaign measured the r5/r12 path at ~15× cpu for 10× rows
-  * (PLANS.md:380), the fingerprint of a non-codegen hot loop getting
-  * progressively unluckier with JIT. `get_json_object` is the same
+  * sf1 campaign measured the r5/r12 path at ~15× cpu for 10× rows,
+  * the fingerprint of a non-codegen hot loop getting progressively
+  * unluckier with JIT. `get_json_object` is the same
   * story. For the fixed-shape decode these paths actually need —
   * "give me top-level key K of this flat-ish JSON object as a string"
   * — a single forward scan suffices: no token stream, no schema

@@ -113,7 +113,7 @@ object Restore {
     // compiled graft_json_scalar kernel, entirely inside whole-stage
     // codegen. The generic JSON datasource pays an interpreted Jackson
     // token pull + generic row conversion per line — measured ~15× cpu
-    // for 10× rows on the r12 path (PLANS.md:380). Composite schemas
+    // for 10× rows on the r12 path at sf1. Composite schemas
     // (nested structs/arrays/maps) keep the datasource path.
     val flat = dataFields.forall(f => stringifiedSchema(f.dataType) == StringType)
     val raw = if (flat) {

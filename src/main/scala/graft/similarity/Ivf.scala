@@ -144,8 +144,7 @@ object Ivf {
   // k·d grows only with K, never with N.
   //
   // Activation is EXPLICIT: the `spark.graft.ivf.targetCellSize` conf
-  // (env SPARK_GRAFT_IVF_CELL_SIZE for harnesses) switches
-  // [[semDedup]]/[[cellStats]]/[[semDedupRecall]] — the cell-CONSUMING
+  // switches [[semDedup]]/[[cellStats]]/[[semDedupRecall]] — the cell-CONSUMING
   // operators whose cost scales with occupancy — onto the scaled
   // codebook. Unset (the default, and the correctness gate's state)
   // everything uses the fixture literals and the oracle parity is
@@ -168,9 +167,7 @@ object Ivf {
   val ScaledIters = 5
 
   def targetCellSize(spark: SparkSession): Long =
-    spark.conf.getOption(TargetCellSizeKey)
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_CELL_SIZE"))
-      .map(_.toLong).getOrElse(0L)
+    spark.conf.getOption(TargetCellSizeKey).map(_.toLong).getOrElse(0L)
 
   /** Two half-space codebooks; cell = c1·|b| + c2, k = |a|·|b|. */
   final case class ScaledCodebook(a: Array[Array[Double]],

@@ -177,7 +177,7 @@ object Pq {
     * stays ≤ ~32 MiB — comfortably a broadcast — and the per-pair cost
     * drops from M×SubDim fused multiply-adds to M integer lookups.
     * Past it the fused form keeps the broadcast 8× smaller (floats
-    * only). `SPARK_GRAFT_PQ_TABLE=0|1` overrides for local A/B only. */
+    * only). */
   val TableMaxProbes = 16384L
 
   /** Probe-side broadcast budget in BYTES (r14 verdict #2): a probe
@@ -241,31 +241,23 @@ object Pq {
 
   /** [[batchAdcTopK]] against an explicit probe frame
     * (`probe_id`, `q_emb`) with `nProbes` as the size estimate driving
-    * the shape selection — the entry point scale harnesses use to
-    * exercise the above-budget arm with synthesized probe sets. */
+    * the shape selection — the entry point for synthesized probe
+    * sets, which can exercise the above-budget arm. */
   def batchAdcTopKForProbes(spark: SparkSession, embeddings: DataFrame,
                             probes0: DataFrame, nProbes: Long,
                             k: Int): DataFrame = {
     VectorFunctions.register(spark)
     val budget = broadcastBudget(spark)
     val canBroadcastFused = nProbes * FusedRowBytes <= budget
-    val forcedTable = sys.env.get("SPARK_GRAFT_PQ_TABLE").contains("1")
-    val useTable = sys.env.get("SPARK_GRAFT_PQ_TABLE") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ => nProbes * TableRowBytes <= budget
-    }
+    val useTable = nProbes * TableRowBytes <= budget
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
       .orderBy(col("adc_micro"), col("nn_id"))
-    // the auto choice only picks the table kernel when the (bigger)
-    // table rows fit the budget, which implies the fused rows do too;
-    // an EXPLICIT SPARK_GRAFT_PQ_TABLE=1 is an A/B ask and is honored
-    // even in the bucketed arm (table rows replicate B× — that cost is
-    // exactly what the A/B measures) instead of silently downgrading
-    // to the fused kernel above the budget
+    // the table kernel is picked only when the (bigger) table rows fit
+    // the budget, which implies the fused rows do too: the bucketed arm
+    // always replicates raw floats, never 2 KiB tables
     val (probes, adc) =
-      if (useTable && (canBroadcastFused || forcedTable))
+      if (useTable)
         (probes0.select(col("probe_id"),
           expr("graft_pq_adc_table(q_emb)").as("adc_tab")),
           "graft_pq_adc_lookup(codes, adc_tab)")
@@ -403,7 +395,7 @@ object Pq {
 
   /** [[batchIvfAdcTopK]] against an explicit probe frame
     * (`probe_id`, `embedding`) with `nProbes` driving shape selection
-    * (the scale-harness entry point, like [[batchAdcTopKForProbes]]). */
+    * (the synthesized-probe entry point, like [[batchAdcTopKForProbes]]). */
   def batchIvfAdcTopKForProbes(spark: SparkSession, embeddings: DataFrame,
                                probes0: DataFrame, nProbes: Long,
                                k: Int): DataFrame = {

@@ -281,8 +281,8 @@ object BackupSink {
     * log when it exists — O(new records) per trigger on ANY filesystem,
     * including object stores where directory mtimes are synthetic and
     * the r14 leaf cache is soundly disabled (there a manifest-less tail
-    * re-lists the whole tree every trigger: ~14 s at the 800 k-chunk
-    * decade per PLANS.md).
+    * re-lists the whole tree every trigger: ~14 s measured at the
+    * 800 k-chunk decade).
     *
     * Why the log is complete (forward from its creation): every publish
     * path funnels through [[BackupBatchWrite.commit]] or

@@ -1213,7 +1213,7 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   // mtime semantics at all. This is the object-store lever: S3A/GCS
   // directory mtimes are synthetic, the r14 leaf cache is soundly
   // disabled there, and a manifest-less tail re-lists the whole tree
-  // every trigger (~14 s at the 800 k-chunk decade per PLANS.md);
+  // every trigger (~14 s measured at the 800 k-chunk decade);
   // manifest-served triggers never list a data directory again. It
   // also tightens exactly-once: a crashed streaming epoch's
   // half-published chunks are INVISIBLE here until their epoch marker

@@ -27,38 +27,12 @@ class BenchSpec extends SparkTestBase {
     }.toSeq.sorted
     val line = Bench.finalLine(
       total = 99999.999, totalOk = 99999.999, nFailed = 999,
-      sfDir = "/root/testdata/sf0.1", loadMax = 999.999,
-      otherMax = 999.999, nHot = 999, nRetimed = 999, rowsOnly = rowsOnly,
-      // worst case: a pathological round regresses MANY queries — the
-      // rendered list must stay capped regardless
-      regressions = (1 to 500).map(i => f"q$i%02d_some_longish_name"),
-      initialPartitions = 4096, inputMib = 99999999L)
+      sfDir = "/data/graft/testdata/sf0.1", rowsOnly = rowsOnly,
+      initialPartitions = 4096, inputMib = 99999999L, nQueries = 99999)
     val bytes = line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-    assert(bytes < 1700, s"final line is $bytes bytes: $line")
-  }
-
-  test("regressions list is capped in the final line but counted in full") {
-    val line = Bench.finalLine(1.0, 1.0, 0, "/tmp/x",
-      regressions = (1 to 40).map(i => s"q$i"))
-    assert(line.contains("\"n_regressed\":40"))
-    // capped render: q12 present, q13 absent
-    assert(line.contains("\"q12\"") && !line.contains("\"q13\""))
-  }
-
-  test("prevWalls reads the committed quiet capture's queries map") {
-    val f = java.nio.file.Files.createTempFile("bench_prev", ".json")
-    java.nio.file.Files.write(f,
-      """{"final":{"value":1.0},"queries":{"q1":0.5,"q2":2.25}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(Bench.prevWalls(f.toString) == Map("q1" -> 0.5, "q2" -> 2.25))
-    // sf gating: walls only apply at the capture's own scale factor
-    assert(Bench.prevWalls(f.toString,
-      forSfDir = Some("/tmp/graft_sf10")).isEmpty)
-    // absent / malformed files degrade to empty, never throw
-    assert(Bench.prevWalls("/nonexistent/nope.json").isEmpty)
-    java.nio.file.Files.write(f, "not json".getBytes)
-    assert(Bench.prevWalls(f.toString).isEmpty)
-    java.nio.file.Files.deleteIfExists(f)
+    // value-only now (no regression list, no host telemetry): a quarter
+    // of the window, leaving the rest for the per-query lines before it
+    assert(bytes < 512, s"final line is $bytes bytes: $line")
   }
 
   test("rows-only-by-design stays the known inexpressible set") {
@@ -86,9 +60,8 @@ class BenchSpec extends SparkTestBase {
     // assert the rendered shape is exactly the driver contract keys
     val keys = "\"(\\w+)\":".r.findAllMatchIn(line).map(_.group(1)).toSeq
     assert(keys == Seq("metric", "value", "unit", "total_ok", "n_failed",
-      "load_max", "other_max", "n_hot", "n_retimed", "n_regressed",
-      "regressions", "rows_only_by_design", "initial_partitions",
-      "input_mib", "sf"))
+      "rows_only_by_design", "initial_partitions", "input_mib",
+      "n_queries", "sec_per_query", "sf"))
   }
 
   test("per-query lines are small self-contained JSON (driver-tail survivable)") {
@@ -112,6 +85,51 @@ class BenchSpec extends SparkTestBase {
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
     assert(node.get("q").asText() == key)
     assert(node.get("sec").asDouble() == 1.0)
+  }
+
+  test("stdout is the map line first, one line per query, the final line last") {
+    val lines = Bench.stdoutLines(Seq(
+      Bench.Timed("q01_a", 1.25, ok = true),
+      Bench.Timed("q02_b", -0.5, ok = false),
+      Bench.Timed("x03_c", 2.0, ok = true)),
+      sfDir = "/tmp/sf", rowsOnly = Seq("x03_c"),
+      initialPartitions = 4, inputMib = 12L)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nodes = lines.map(json.readTree)
+    assert(lines.size == 5)
+    assert(lines.head ==
+      """{"metric":"queries","queries":{"q01_a":1.250,"q02_b":-0.500,""" +
+        """"x03_c":2.000},"sf":"/tmp/sf"}""")
+    assert(nodes.slice(1, 4).map(n =>
+      n.get("q").asText() -> n.get("sec").asDouble()) ==
+      Seq("q01_a" -> 1.25, "q02_b" -> -0.5, "x03_c" -> 2.0))
+    val last = nodes.last
+    assert(last.get("metric").asText() == "total")
+    assert(last.get("value").asDouble() == 3.75)     // |walls| summed
+    assert(last.get("total_ok").asDouble() == 3.25)  // succeeded only
+    assert(last.get("n_failed").asInt() == 1)
+    assert(last.get("n_queries").asInt() == 3)
+    assert(last.get("sec_per_query").asDouble() == 1.25)
+    assert(last.get("rows_only_by_design").get(0).asText() == "x03_c")
+    assert(last.get("initial_partitions").asInt() == 4)
+    assert(last.get("input_mib").asLong() == 12L)
+    assert(last.get("sf").asText() == "/tmp/sf")
+  }
+
+  test("driver session conf: cpu-wide shuffles, derived AQE width, " +
+    "hash-join threshold, result cap at half the heap") {
+    val conf = DriverSession.conf(cpus = 4, initialPartitions = 256,
+      maxHeapBytes = 4L << 30).toMap
+    assert(conf("spark.sql.shuffle.partitions") == "4")
+    assert(conf("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      == "256")
+    assert(conf("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold")
+      == "128m")
+    assert(conf("spark.driver.maxResultSize") == "2048m")
+    // capped at 8g however large the heap
+    val bigHeap = DriverSession.conf(4, 4, 64L << 30).toMap
+    assert(bigHeap("spark.driver.maxResultSize") == "8192m")
+    assert(conf("spark.sql.session.timeZone") == "UTC")
   }
 
   test("final line is valid minimal JSON with the keys the driver parses") {
@@ -145,7 +163,8 @@ class BenchSpec extends SparkTestBase {
         val f = new java.io.RandomAccessFile(
           new java.io.File(dir, "x.parquet"), "rw")
         try f.setLength(bytes) finally f.close()
-        Bench.derivedInitialPartitions(dir.getAbsolutePath, cpus)
+        DriverSession.derivedInitialPartitions(
+          DriverSession.inputBytes(dir.getAbsolutePath), cpus)
       } finally {
         dir.listFiles().foreach(_.delete()); dir.delete(): Unit
       }
@@ -155,6 +174,7 @@ class BenchSpec extends SparkTestBase {
     assert(widthFor(15566L << 20, 32) == 256)       // sf100-shaped
     assert(widthFor(15566L << 30, 32) == 4096)      // petabyte-shaped: cap
     // unreadable dir -> 0 bytes -> the cpu floor, never a crash
-    assert(Bench.derivedInitialPartitions("/nonexistent/path", 32) == 32)
+    assert(DriverSession.derivedInitialPartitions(
+      DriverSession.inputBytes("/nonexistent/path"), 32) == 32)
   }
 }

@@ -2,15 +2,15 @@ package graft.queries
 
 import graft.{SparkEntry, SparkTestBase}
 
-/** Bench's retime loop re-executes a flagged query INSIDE the same JVM,
-  * so every run function must be rerun-safe: same result, no
-  * leftover-state failure. Most queries are pure reads; the stateful
-  * class is the scratch-dir/DDL set (backup spine, roundtrip sources,
-  * persisted indexes, catalog DML). q73 failed exactly this way in a
-  * live bench window — DROP TABLE on its EXTERNAL table kept the
-  * location's files and the rerun's CTAS refused the non-empty dir
-  * (every retime sample ok=false) — so this spec double-runs the whole
-  * stateful set and would have caught it.
+/** Every run function must be rerun-safe in one JVM: same result, no
+  * leftover-state failure — a library caller, a test suite or a
+  * one-JVM harness may run a query twice. Most queries are pure reads;
+  * the stateful class is the scratch-dir/DDL set (backup spine,
+  * roundtrip sources, persisted indexes, catalog DML). q73 once failed
+  * exactly this way on a second run — DROP TABLE on its EXTERNAL table
+  * kept the location's files and the rerun's CTAS refused the
+  * non-empty dir — so this spec double-runs the whole stateful set and
+  * would have caught it.
   *
   * Streaming queries are excluded: their rerun story is checkpoint
   * RESTART, pinned by the streaming specs (s19) and the s23/s26
