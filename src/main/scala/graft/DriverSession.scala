@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session the driver mains ([[Bench]], [[Verify]]) run on, so
-  * the plans Bench times are the plans Verify dumps for the oracle. */
+/** The one session every main ([[Bench]], [[Verify]], the
+  * [[graft.tools]] mains) runs on, so the plans Bench times are the
+  * plans Verify dumps for the oracle. Session state is built here once;
+  * operators never change it. */
 object DriverSession {
 
   /** What [[build]] returns: the session and the AQE sizing it derived
@@ -43,13 +45,19 @@ object DriverSession {
     "spark.driver.maxResultSize" ->
       s"${math.min(8L << 30, maxHeapBytes / 2) >> 20}m",
     "spark.sql.session.timeZone" -> "UTC",
+    // a TIMESTAMP(NANOS) parquet column reads as long; Tables.loadPath
+    // converts it to µs TimestampType
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // the fixed IVF/PQ codebook training sample: the oracle SQL embeds
+    // the codebooks trained on it, whatever sf the queries run at
+    graft.similarity.Ivf.TrainDirKey -> "/root/testdata/sf0.001",
     "spark.ui.enabled" -> "false")
 
   /** Builds the session for `sfDir` on `local[SPARK_GRAFT_CPUS]`
     * (default 32). The graft plan tier (GroupTopK strategy +
     * TopKRewrite + graft_* functions) is
-    * registered at SESSION BUILD, not via per-query enableRewrite
-    * calls: a mid-suite activation would make every later window-rank
+    * registered at SESSION BUILD, the only registration route, not via
+    * per-query calls: a mid-suite activation would make every later window-rank
     * plan depend on suite execution order — with the extension here,
     * the plan each query gets is the plan a fresh-session library user
     * gets (PlanDeterminismSpec pins it). */

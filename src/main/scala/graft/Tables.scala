@@ -19,7 +19,9 @@ object Tables {
     * TIMESTAMP_NTZ, which `unix_micros`, `withWatermark`, and the rest
     * of the timestamp-only surface reject at analysis time. Fixture
     * writers have historically emitted three parquet encodings for
-    * `ts` — TIMESTAMP(NANOS) (read as long under the legacy flag),
+    * `ts` — TIMESTAMP(NANOS) (read as long under the legacy
+    * `spark.sql.legacy.parquet.nanosAsLong` flag, set at session build
+    * by [[DriverSession]]),
     * `timestamp[us]` without the UTC-adjusted flag (read as
     * TIMESTAMP_NTZ by Spark 4 — the pandas/pyarrow and DuckDB writer
     * default; r7's silent fixture regeneration broke 11 operators this
@@ -31,7 +33,6 @@ object Tables {
     * timestamp arithmetic.
     */
   def loadPath(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df0 = spark.read.parquet(path)
     val df = df0.schema.fields.find(f => f.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>

@@ -60,15 +60,6 @@ object Dedup {
   def hash60Sql(inner: String, seed: Int): String =
     s"CAST(conv(substring(md5(concat('$seed|', $inner)), 1, 15), 16, 10) AS BIGINT)"
 
-  /** Idempotent registration of the compiled signature kernels
-    * (graft_shingles / graft_hash60_array / ...): the HOF SQL versions
-    * of these were interpreted (CodegenFallback) and bimodally slow —
-    * see [[graft.functions.DedupExpressions]]. */
-  private def withKernels(df: DataFrame): DataFrame = {
-    graft.functions.DedupFunctions.register(df.sparkSession)
-    df
-  }
-
   /** Spread rows across cores before CPU-heavy per-row hashing: the
     * fixture tables arrive as one small parquet file → one input
     * partition, which would serialize the whole signature computation
@@ -156,7 +147,7 @@ object Dedup {
 
   /** doc_id + distinct shingles. */
   def withShingles(docs: DataFrame, textCol: String = "text"): DataFrame =
-    spread(withKernels(docs))
+    spread(docs)
       .withColumn("gs", expr(s"graft_shingles($textCol, $ShingleK)"))
 
   /** ONE md5 per shingle: the 60-bit base hash array every signature
@@ -252,8 +243,7 @@ object Dedup {
     * the base and the second recomputes without cache — documented as
     * correct-only-slower, exactly like every other early release. */
   def lshCandidatePairsFromBase(base: DataFrame): DataFrame = {
-    val sigd = withKernels(base)
-      .withColumn("sig", expr("graft_minhash_sig(hs)"))
+    val sigd = base.withColumn("sig", expr("graft_minhash_sig(hs)"))
     val buckets = (0 until Bands).map { b =>
       md5(concat_ws(",",
         (0 until RowsPerBand).map(r =>
@@ -474,7 +464,6 @@ object Dedup {
 
   private def ngramPairsOnG(g: DataFrame, maxDf: Int, threshold: Double,
       wideHash: Boolean, smallCorpusMaxDocs: Long): DataFrame = {
-    graft.functions.DedupFunctions.register(g.sparkSession)
     // The bucket expansion's graft_pairs cap must COVER maxDf: a bucket
     // is one gram's df<=maxDf posting list, and a binding cap would
     // silently UNDERCOUNT c_win — here an exactness input, not a recall
@@ -823,7 +812,6 @@ object Dedup {
   def substringDupCoverage(docs: DataFrame, k: Int = SubstringK,
                            textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.DedupFunctions.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"), split(col(textCol), " ").as("w"))
     // positions are 1-based; docs shorter than k emit no windows (the
     // CASE guard matters: sequence(1, 0) in Spark counts DOWN)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,15 +126,10 @@ case class BpeAdjacentPairsExpr(child: Expression)
 }
 
 object BpeFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** (name, builder) pairs, injected by
+    * [[graft.plans.GraftSparkExtensions]] at session build. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_bpe_symbols" -> (es => BpeSymbolsExpr(es.head)),
     "graft_bpe_merge" -> (es => BpeMergeExpr(es(0), es(1), es(2))),
     "graft_bpe_pairs" -> (es => BpeAdjacentPairsExpr(es.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "scala_udf")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -476,13 +475,13 @@ case class SortedIntersectCountLong2Expr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** SQL registration so `expr("graft_shingles(text, 3)")` etc. work from
-  * the Column API (same route as [[VectorFunctions]]). */
+/** SQL function builders, so `expr("graft_shingles(text, 3)")` etc.
+  * work from the Column API (same route as [[VectorFunctions]]). */
 object DedupFunctions {
   private def lit(e: Expression): Int = e.eval().asInstanceOf[Int]
 
-  /** (name, builder) pairs — shared by per-session [[register]] and the
-    * config-based [[graft.plans.GraftSparkExtensions]] injection. */
+  /** (name, builder) pairs, injected by
+    * [[graft.plans.GraftSparkExtensions]] at session build. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_shingles" -> (es => ShinglesExpr(es.head, lit(es(1)))),
     "graft_hash60_array" -> (es => Hash60ArrayExpr(es.head, lit(es(1)))),
@@ -499,11 +498,4 @@ object DedupFunctions {
       (es => SortedIntersectCountLongExpr(es.head, es(1))),
     "graft_rolling_hash" ->
       (es => RollingHashExpr(es.head, TextAnalysis.FpMod)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "scala_udf")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -474,17 +473,10 @@ case class HtmlAnchorsExpr(child: Expression) extends UnaryExpression {
 }
 
 object HtmlFunctions {
-  /** (name, builder) pairs — shared by per-session [[register]] and the
-    * config-based [[graft.plans.GraftSparkExtensions]] injection. */
+  /** (name, builder) pairs, injected by
+    * [[graft.plans.GraftSparkExtensions]] at session build. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_html_extract" -> (es => HtmlExtractExpr(es.head)),
     "graft_html_links" -> (es => HtmlLinksExpr(es.head)),
     "graft_html_anchors" -> (es => HtmlAnchorsExpr(es.head)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "scala_udf")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -175,16 +174,8 @@ case class JsonGetScalarExpr(left: Expression, right: Expression)
 }
 
 object JsonFunctions {
-  /** (name, builder) — shared by [[register]] and the config-based
-    * [[graft.plans.GraftSparkExtensions]] injection. */
+  /** (name, builder) pairs, injected by
+    * [[graft.plans.GraftSparkExtensions]] at session build. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_json_scalar" -> (es => JsonGetScalarExpr(es.head, es(1))))
-
-  /** Idempotent session registration (same route as [[DedupFunctions]]). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "scala_udf")
-    }
-  }
 }

@@ -78,7 +78,8 @@ object TextAnalysis {
     * arithmetic, identical in any engine with a left fold. Compiled
     * kernel ([[DedupKernels.rollingHash]]): the HOF form split every
     * row into single-char strings and folded them interpreted.
-    * Callers must have [[DedupFunctions.register]]ed the session. */
+    * The session must be built with
+    * [[graft.plans.GraftSparkExtensions]]. */
   val FpMod = 2147483647L
   def fingerprint(colName: String): Column =
     expr(s"graft_rolling_hash($colName)")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -681,14 +680,11 @@ case class QuantizeStatsExpr(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
-/** Column-level API + SQL registration for the vector expressions. */
+/** SQL function builders for the vector expressions. */
 object VectorFunctions {
 
-  /** Register `graft_dot` / `graft_cosine` in the session's function
-    * registry (idempotent) so `expr("graft_cosine(a, b)")` works.
-    */
-  /** (name, builder) pairs — shared by per-session [[register]] and the
-    * config-based [[graft.plans.GraftSparkExtensions]] injection.
+  /** (name, builder) pairs, injected by
+    * [[graft.plans.GraftSparkExtensions]] at session build.
     * Builders run at PARSE time (an active session exists), so the
     * lazily-trained Ivf codebook resolves correctly. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -718,11 +714,4 @@ object VectorFunctions {
     "graft_pq_adc_lookup" -> (es => PqAdcLookupExpr(es.head, es(1))),
     "graft_pq_distort" ->
       (es => PqDistortExpr(es.head, graft.similarity.Pq.codebooks)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "scala_udf")
-    }
-  }
 }

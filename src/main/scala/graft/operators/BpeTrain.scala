@@ -48,7 +48,6 @@ object BpeTrain {
   val TruncateEvery = 4
 
   def train(spark: SparkSession, words: DataFrame, rounds: Int): Seq[MergeRule] = {
-    graft.functions.BpeFunctions.register(spark)
     val rules = scala.collection.mutable.ArrayBuffer.empty[MergeRule]
     val base = words
       .select(col("cnt"), call_function("graft_bpe_symbols", col("word")).as("syms"))
@@ -116,7 +115,6 @@ object BpeTrain {
     * — the "does this tokenizer fit this corpus" audit number. */
   def encodeStats(docs: DataFrame, textCol: String,
                   rules: Seq[MergeRule]): DataFrame = {
-    graft.functions.BpeFunctions.register(docs.sparkSession)
     val words = docs
       .select(col("doc_id"), explode(split(col(textCol), " ")).as("word"))
       .filter(length(col("word")) > 0)

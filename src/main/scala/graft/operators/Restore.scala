@@ -117,25 +117,18 @@ object Restore {
     // (nested structs/arrays/maps) keep the datasource path.
     val flat = dataFields.forall(f => stringifiedSchema(f.dataType) == StringType)
     val raw = if (flat) {
-      graft.functions.JsonFunctions.register(spark)
-      // text can't take a user schema, so pin partition-column types by
-      // disabling inference for this read (everything arrives as the
-      // stringified form, exactly like the schema-directed json read)
-      val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-      val prev = spark.conf.get(inferKey)
-      spark.conf.set(inferKey, "false")
-      try {
-        // the text source's own column is named `value`; rename it so a
-        // data field with that name can't collide with the raw line
-        val line = "__graft_raw_line"
-        val txt = spark.read.text(backupDir).withColumnRenamed("value", line)
-        dataFields.foldLeft(txt) { (d, f) =>
-          require(!f.name.contains("'") && !f.name.contains("\\") &&
-            f.name != line,
-            s"field name ${f.name} would need escaping in the extraction")
-          d.withColumn(f.name, expr(s"graft_json_scalar($line, '${f.name}')"))
-        }.drop(line)
-      } finally spark.conf.set(inferKey, prev)
+      // the read schema names the raw line (so a data field called
+      // `value` can't collide with it) and pins the partition columns
+      // to strings, exactly like the schema-directed json read below
+      val line = "__graft_raw_line"
+      val txt = spark.read.schema(StructType(Seq(line, partitionColumn, "date_dir")
+        .map(StructField(_, StringType)))).text(backupDir)
+      dataFields.foldLeft(txt) { (d, f) =>
+        require(!f.name.contains("'") && !f.name.contains("\\") &&
+          f.name != line,
+          s"field name ${f.name} would need escaping in the extraction")
+        d.withColumn(f.name, expr(s"graft_json_scalar($line, '${f.name}')"))
+      }.drop(line)
     } else {
       val readSchema = StructType(
         dataFields.map(f => f.copy(dataType = stringifiedSchema(f.dataType))) :+

@@ -25,10 +25,8 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   *
   * Wiring: [[GroupTopKStrategy]] plans the logical node into
   * partial+final [[GroupTopKExec]]; the final's required distribution
-  * makes EnsureRequirements insert the (tiny) exchange. Register per
-  * session via `spark.experimental.extraStrategies` (done by
-  * [[GroupTopK.topK]]) or through SparkSessionExtensions with
-  * [[GraftSparkExtensions]].
+  * makes EnsureRequirements insert the (tiny) exchange. The session
+  * gets the strategy at build, from [[GraftSparkExtensions]].
   */
 /** Which rank function's `<= k` semantics the operator reproduces.
   *  - [[RowNumberMode]]: exactly k rows per group (boundary ties
@@ -246,24 +244,9 @@ object GroupTopK {
     * arbitrarily — exactly like `row_number()`, whose rank among full
     * ties is also arbitrary, but the SET of returned rows then differs
     * run-to-run; a unique tie-break makes both deterministic. */
-  /** Enable [[TopKRewrite]] (window-rank idiom → GroupTopKNode) plus
-    * the planning strategy on a live session — the runtime counterpart
-    * of config-based [[GraftSparkExtensions]] registration. */
-  def enableRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupTopKStrategy
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-  }
-
   def topK(df: DataFrame, groupCols: Seq[String], orderCol: String,
            k: Int, desc: Boolean = true, tieBreak: String): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupTopKStrategy
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output
       .find(_.name.equalsIgnoreCase(n))
@@ -280,8 +263,8 @@ object GroupTopK {
 /** Config-based registration
   * (`spark.sql.extensions=graft.plans.GraftSparkExtensions`): the whole
   * library surface — the GroupTopK physical strategy plus every graft_*
-  * expression family — lands in any session built with that one conf,
-  * no per-session `register(spark)` calls. This is the deployment story
+  * expression family — lands in any session built with that one conf.
+  * It is the only registration route. This is the deployment story
   * for a shared cluster: ship the jar, set the conf, and `expr(
   * "graft_cosine(a, b)")` / SQL `SELECT graft_json_scalar(...)` work in
   * every notebook and job. */
@@ -297,7 +280,8 @@ class GraftSparkExtensions
       graft.functions.DedupFunctions.builders ++
         graft.functions.VectorFunctions.builders ++
         graft.functions.JsonFunctions.builders ++
-        graft.functions.HtmlFunctions.builders
+        graft.functions.HtmlFunctions.builders ++
+        graft.functions.BpeFunctions.builders
     families.foreach { case (name, builder) =>
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

@@ -204,7 +204,6 @@ object DedupQueries {
          |  count(*) AS n_docs
          |FROM s GROUP BY split""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      graft.functions.DedupFunctions.register(s)
       docs
         .withColumn("bucket",
           expr("element_at(graft_hash60_array(array(CAST(doc_id AS STRING)), 42), 1) % 100"))
@@ -233,7 +232,6 @@ object DedupQueries {
          |                    THEN 80 ELSE 40 END
          |GROUP BY source""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      graft.functions.DedupFunctions.register(s)
       docs
         .withColumn("bucket",
           expr("element_at(graft_hash60_array(array(CAST(doc_id AS STRING)), 7), 1) % 100"))
@@ -596,7 +594,6 @@ object DedupQueries {
          |SELECT source, count(*) AS n_docs,
          |       CAST(sum(n) AS BIGINT) AS total_shingles
          |FROM s WHERE n >= 30 GROUP BY source""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("graft_documents")
       s.sql(
         s"""SELECT source, count(*) AS n_docs,
@@ -641,7 +638,6 @@ object DedupQueries {
          |SELECT doc_id, n_total, n_distinct,
          |       round(1.0 - n_distinct::DOUBLE / n_total, 6) AS rep_ratio
          |FROM s""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       Tables.documents(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .withColumn("n_total",

@@ -76,7 +76,6 @@ object PipelineQueries {
          |SELECT doc_id,
          |  row_number() OVER (ORDER BY hs, doc_id) AS shuffle_pos
          |FROM h""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       val h = Tables.documents(s, dir)
         .withColumn("hs", expr(
           s"element_at(graft_hash60_array(array(CAST(doc_id AS STRING)), $ShuffleSeed), 1)"))
@@ -174,7 +173,6 @@ object PipelineQueries {
          |SELECT bucket, ((cum - tok) // $PackBudget)::BIGINT AS shard,
          |       count(*) AS n_docs, sum(tok)::BIGINT AS shard_tokens
          |FROM c GROUP BY bucket, shard""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val base = docs.select(
         col("doc_id"),
@@ -276,7 +274,6 @@ object PipelineQueries {
          |    ELSE 0 END) AS BIGINT) AS sampled_tokens
          |FROM r JOIN t ON t.source = r.source
          |GROUP BY 1, 2, 3, 4""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       val t = Tables.documents(s, dir).select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("bigint").as("toks"))
         .withColumn("bucket", expr(
@@ -378,7 +375,6 @@ object PipelineQueries {
          |  ((cum - toks) // $PackBudget)::BIGINT AS shard,
          |  count(*) AS n_docs, CAST(sum(toks) AS BIGINT) AS shard_tokens
          |FROM c2 GROUP BY 1, 2, 3""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       def hashBit(seed: Int, mod: Long) = expr(
         "element_at(graft_hash60_array(array(CAST(doc_id AS STRING)), " +
           s"$seed), 1) % $mod")
@@ -486,7 +482,6 @@ object PipelineQueries {
          |FROM rb LEFT JOIN ra USING (doc_id)
          |ORDER BY rrf DESC, rb.doc_id LIMIT 20""".stripMargin
     }) { (s, dir) =>
-      graft.functions.VectorFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val emb = Tables.embeddings(s, dir)
       // ---- BM25 leg: x38's integer score, query terms only ----
@@ -553,7 +548,6 @@ object PipelineQueries {
          |       CAST(u AS DOUBLE) / w AS priority
          |FROM s
          |ORDER BY priority, doc_id LIMIT $WSampleK""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
           greatest(length(col("text")), lit(1)).cast("long").as("w"),

@@ -113,7 +113,6 @@ object RefQueries {
       // compiled single-key extraction (graft.functions.JsonKernels)
       // instead of from_json: JsonToStructs is CodegenFallback and the
       // sf1 campaign measured ~15× cpu for 10× rows on this path
-      graft.functions.JsonFunctions.register(s)
       Tables.events(s, dir)
         .select(expr("graft_json_scalar(props, 'k')").cast("int").as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("n"))

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorFunctions
 import graft.similarity.{Ann, Ivf}
 
 /** [EXT] Similarity-search query surface over the `embeddings` fixture.
@@ -650,7 +649,6 @@ object SimilarityQueries {
          |  round(max_err, 9) AS max_abs_err,
          |  round(mean_err, 9) AS mean_abs_err
          |FROM e""".stripMargin) { (s, dir) =>
-      VectorFunctions.register(s)
       Tables.embeddings(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .withColumn("qs", expr("graft_quantize_stats(embedding)"))
@@ -714,8 +712,7 @@ object SimilarityQueries {
              |       count(DISTINCT e.label) AS n_labels
              |FROM a JOIN embeddings e ON e.vec_id = a.vec_id
              |GROUP BY a.cell""".stripMargin) { (s, dir) =>
-          KMeans.bindReference(s)
-          KMeans.assign(Tables.embeddings(s, dir))
+          KMeans.assign(Tables.embeddings(s, dir), KMeans.referenceCentroids)
             .groupBy(col("cell"))
             .agg(count(lit(1)).as("n_members"),
               sum(col("vec_id")).cast("bigint").as("sum_ids"),
@@ -728,8 +725,8 @@ object SimilarityQueries {
             s"[similarity] k-means reference training failed: ${t.getMessage}")
           QueryDef.rowsOnly { (s, dir) =>
             val emb = Tables.embeddings(s, dir)
-            graft.similarity.KMeans.train(emb, k = 8, iters = 3)
-            graft.similarity.KMeans.assign(emb)
+            val model = graft.similarity.KMeans.train(emb, k = 8, iters = 3)
+            graft.similarity.KMeans.assign(emb, model.centroids)
               .groupBy(col("cell"))
               .agg(count(lit(1)).as("n_members"),
                 sum(col("vec_id")).cast("bigint").as("sum_ids"),

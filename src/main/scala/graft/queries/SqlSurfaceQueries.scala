@@ -1089,9 +1089,12 @@ object SqlSurfaceQueries {
         |    (1 - CAST(l_discount AS DECIMAL(12,2)))) AS VARCHAR) AS DOUBLE)
         |    AS revenue,
         |  count(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin) { (s, dir) =>
+        |FROM lineitem GROUP BY 1""".stripMargin) { (s0, dir) =>
+      // the function is created in a clone: the caller's registry stays
+      // as the session was built
+      val s = s0.newSession()
       s.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION graft_q89_disc_price(
+        """CREATE TEMPORARY FUNCTION graft_q89_disc_price(
           |  p DOUBLE, d DOUBLE) RETURNS DECIMAL(26,4)
           |RETURN CAST(p AS DECIMAL(12,2)) * (1 - CAST(d AS DECIMAL(12,2)))
           |""".stripMargin)
@@ -1116,9 +1119,10 @@ object SqlSurfaceQueries {
       """SELECT r_name, gs.step
         |FROM region, LATERAL (
         |  SELECT unnest(generate_series(1, CAST(r_regionkey AS INT) + 1))
-        |    AS step) gs""".stripMargin) { (s, dir) =>
+        |    AS step) gs""".stripMargin) { (s0, dir) =>
+      val s = s0.newSession() // as q89: the caller's registry stays as built
       s.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION graft_q90_spine(n INT)
+        """CREATE TEMPORARY FUNCTION graft_q90_spine(n INT)
           |RETURNS TABLE(step INT)
           |RETURN SELECT explode(sequence(1, n)) AS step
           |""".stripMargin)

@@ -395,7 +395,6 @@ object TextQueries {
          |  list_reduce(list_prepend(0::BIGINT, [ord(c)::BIGINT for c in string_split(text,'')]),
          |    (acc, c) -> (acc * 31 + c) % $FpMod) AS fp
          |FROM documents""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       Tables.documents(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), fingerprint("text").as("fp"))
@@ -695,7 +694,6 @@ object TextQueries {
          |       (sum(sc.score) // count(*))::BIGINT AS mean_score
          |FROM sc JOIN documents d2 USING (doc_id)
          |GROUP BY d2.source""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val toks = docs.select(col("doc_id"), col("source"),
         split(col("text"), " ").as("w"))
@@ -758,7 +756,6 @@ object TextQueries {
          |SELECT d.doc_id, coalesce(sc.nb, 0)::BIGINT AS n_bigrams,
          |       coalesce(sc.score, -1)::BIGINT AS lm_score
          |FROM d LEFT JOIN sc USING (doc_id)""".stripMargin) { (s, dir) =>
-      graft.functions.DedupFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val toks = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       val arrs = toks.select(col("doc_id"),
@@ -855,7 +852,6 @@ object TextQueries {
          |    AS re_tokens,
          |  extracted
          |FROM e""".stripMargin) { (s, dir) =>
-      graft.functions.HtmlFunctions.register(s)
       Tables.documents(s, dir)
         .select(col("doc_id"), expr(HtmlWrapFrag).as("html"))
         .select(col("doc_id"),
@@ -891,7 +887,6 @@ object TextQueries {
          |  count(*) AS n_links
          |FROM l WHERE href LIKE '/doc/%'
          |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      graft.functions.HtmlFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.agg((max(col("doc_id")) + lit(1L)).as("n"))
       docs.crossJoin(broadcast(n))
@@ -956,7 +951,6 @@ object TextQueries {
          |SELECT node AS doc_id, rank AS rank_e12 FROM r$LrIters"""
         .stripMargin
     }) { (s, dir) =>
-      graft.functions.HtmlFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val nRow = docs.agg((max(col("doc_id")) + lit(1L)).as("n"))
       val edges = docs.crossJoin(broadcast(nRow))
@@ -1075,7 +1069,6 @@ object TextQueries {
          |FROM a WHERE href LIKE '/doc/%'
          |GROUP BY 1, 2, 3""".stripMargin
     }) { (s, dir) =>
-      graft.functions.HtmlFunctions.register(s)
       val docs = Tables.documents(s, dir)
       val n = docs.agg((max(col("doc_id")) + lit(1L)).as("n"))
       docs.crossJoin(broadcast(n))

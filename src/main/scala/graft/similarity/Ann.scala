@@ -3,8 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
 /** [EXT] Similarity search over an embedding column (`Array[Float]`).
   *
   * Two paths, per the build rules:
@@ -79,7 +77,6 @@ object Ann {
     * i.e. interpreted per element per plane). Dot accumulation is in
     * element order, so the DuckDB oracle is bit-identical. */
   def withSignature(embeddings: DataFrame, embCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     spread(embeddings)
       .withColumn("bucket", expr(s"graft_hyperplane_sig($embCol)"))
   }
@@ -87,7 +84,6 @@ object Ann {
   /** Exact brute-force top-k neighbours of one stored vector. */
   def bruteForceTopK(spark: SparkSession, embeddings: DataFrame,
                      queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
     spread(embeddings).crossJoin(broadcast(q))
@@ -101,7 +97,6 @@ object Ann {
   /** ANN top-k: candidates share the query's hyperplane bucket. */
   def lshTopK(spark: SparkSession, embeddings: DataFrame,
               queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val signed = withSignature(embeddings)
     val q = signed.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"), col("bucket").as("q_bucket"))
@@ -150,8 +145,6 @@ object Ann {
   def dupPairs(embeddings: DataFrame, minCosine: Double,
                bands: Int = DupBands, bandBits: Int = DupBandBits,
                cap: Int = graft.dedup.Dedup.MaxBucketOccupancy): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
-    graft.functions.DedupFunctions.register(embeddings.sparkSession)
     val perBand = spread(embeddings)
       .withColumn("bks", expr(s"graft_banded_sig(embedding, $bands, $bandBits)"))
       .select(col("vec_id"), col("embedding"),
@@ -189,7 +182,6 @@ object Ann {
     * [[graft.functions.CosineSimF]]. */
   def nearestNeighbors(spark: SparkSession, embeddings: DataFrame,
                        probeMaxId: Long, k: Int = 1): DataFrame = {
-    VectorFunctions.register(spark)
     val probes = embeddings.filter(col("vec_id") < probeMaxId)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         sqrt(expr("graft_dot(embedding, embedding)")).as("p_norm"))
@@ -221,7 +213,6 @@ object Ann {
     * engine-independent (the x09 discipline). */
   def nearestNeighborsL2(spark: SparkSession, embeddings: DataFrame,
                          probeMaxId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val probes = embeddings.filter(col("vec_id") < probeMaxId)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         expr("graft_dot(embedding, embedding)").as("p_n2"))

@@ -1,9 +1,8 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-
-import graft.functions.VectorFunctions
 
 /** [EXT] IVF-quantized ANN — the codebook path next to the hyperplane
   * LSH in [[Ann]] (SURVEY.md §8).
@@ -37,29 +36,27 @@ object Ivf {
   val Iters = 5
   val Dim = Ann.Dim
 
-  /** Conf key overriding the codebook training source (a dir holding
-    * `embeddings.parquet`); env `SPARK_GRAFT_IVF_TRAIN_DIR` is the
-    * session-less fallback. */
+  /** Session conf key naming the codebook training source (a dir
+    * holding `embeddings.parquet`). Set at session build to a fixed
+    * sample, so the codebook (and the oracle SQL generated from it) does
+    * not depend on the query-time sf. */
   val TrainDirKey = "spark.graft.ivf.trainDir"
 
-  /** Default training sample — the fixed fixture, so the codebook (and
-    * the oracle SQL generated from it) does not depend on the
-    * query-time sf. Overridable per deployment via [[TrainDirKey]]. */
-  val DefaultTrainDir = "/root/testdata/sf0.001"
-
-  /** Resolved training source: session conf → env → default. Read at
-    * first [[centroids]] use; the codebook is then fixed for the JVM. */
-  def trainDir: String =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+  /** The training source from the session conf. Read at first
+    * [[centroids]] use; the codebook is then fixed for the JVM. */
+  def trainDir: String = {
+    val dir = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .flatMap(_.conf.getOption(TrainDirKey))
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_TRAIN_DIR"))
-      .getOrElse(DefaultTrainDir)
+    require(dir.isDefined,
+      s"$TrainDirKey is unset: build the session with it (a dir holding embeddings.parquet)")
+    dir.get
+  }
 
   /** Deterministic k-means codebook (see class doc). Computed once per
     * JVM; ~500×64 floats driver-side is microseconds of work. Requires
     * an active SparkSession — a library object must not spin one up as
     * a side effect of first use (`graft_ivf_cell` is registered into
-    * every session by VectorFunctions, so a silent fallback session
+    * every session by GraftSparkExtensions, so a silent fallback session
     * here would be a global surprise). */
   lazy val centroids: Array[Array[Double]] = {
     val spark = SparkSession.getActiveSession
@@ -115,7 +112,6 @@ object Ivf {
 
   /** Corpus with its IVF cell assignment (codegen'd argmin). */
   def withCell(embeddings: DataFrame, embCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     spread(embeddings).withColumn("cell", expr(s"graft_ivf_cell($embCol)"))
   }
 
@@ -215,14 +211,9 @@ object Ivf {
   /** Corpus with the SCALED product-cell assignment. */
   def withScaledCell(embeddings: DataFrame,
                      cb: ScaledCodebook): DataFrame = {
-    val spark = embeddings.sparkSession
-    VectorFunctions.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ivf_imi_cell",
-      es => graft.functions.IvfImiCellExpr(es.head, cb.a, cb.b),
-      "scala_udf")
-    spread(embeddings)
-      .withColumn("cell", expr("graft_ivf_imi_cell(embedding)"))
+    spread(embeddings).withColumn("cell", GraftPlanBridge.column(
+      graft.functions.IvfImiCellExpr(
+        UnresolvedAttribute.quoted("embedding"), cb.a, cb.b)))
   }
 
   /** Cell assignment honoring [[TargetCellSizeKey]]: the scaled product
@@ -241,7 +232,6 @@ object Ivf {
     * candidates by exact cosine within the probed cells only. */
   def topK(spark: SparkSession, embeddings: DataFrame,
            queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val assigned = withCell(embeddings)
     // 16 centroid distances for the one query row, exploded and
     // top-NProbe'd inside the plan — no driver-side math at query time
@@ -293,7 +283,6 @@ object Ivf {
     * `IvfPlanSpec` pins both shapes. */
   def batchTopK(spark: SparkSession, embeddings: DataFrame,
                 probeMaxId: Long, k: Int = 1): DataFrame = {
-    VectorFunctions.register(spark)
     val assigned = withCell(embeddings)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("probe_id"))
@@ -344,7 +333,6 @@ object Ivf {
     * codebook (see the scaled-codebook block above) — the r16 decade
     * rows measure it. */
   def semDedup(embeddings: DataFrame, minCosine: Double): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     val a = withCellAuto(embeddings).select(col("vec_id"), col("cell"),
       col("embedding"))
     val x = a.select(col("vec_id").as("x_id"), col("cell"),
@@ -381,7 +369,6 @@ object Ivf {
     * fixed-Dim corpora, null on zero norms). */
   def semDedupRecall(spark: SparkSession, embeddings: DataFrame,
                      probeMaxId: Long, minCosine: Double): DataFrame = {
-    VectorFunctions.register(spark)
     val withC = withCellAuto(embeddings)
     val probes = withC.filter(col("vec_id") < probeMaxId)
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
@@ -418,7 +405,6 @@ object Ivf {
     * then `TakeOrderedAndProject` — no shuffle beyond the top-N merge,
     * scale-safe at any corpus size. */
   def outlierScores(embeddings: DataFrame, topN: Int = 50): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     spread(embeddings)
       .select(col("vec_id"),
         round(array_min(expr("graft_ivf_dists(embedding)")), 6).as("nn_dist"))

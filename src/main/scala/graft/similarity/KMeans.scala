@@ -1,6 +1,7 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
 import graft.functions.{IvfCellExpr, IvfDistsExpr}
 
@@ -12,9 +13,8 @@ import graft.functions.{IvfCellExpr, IvfDistsExpr}
   *
   * Per iteration, ONE distributed job:
   *   - assignment is the codegen'd argmin kernel ([[IvfCellExpr]])
-  *     rebound to the current centroids (temp-function rebinding; each
-  *     iteration materializes eagerly so analysis captures the right
-  *     binding);
+  *     built over the current centroids as a column (no function is
+  *     registered, so the session is left as it was);
   *   - the update shuffles only partial aggregates: posexplode expands
   *     n·d rows but the hash aggregate's map-side combine reduces the
   *     shuffle to partitions × k × d rows, and the driver collects
@@ -36,14 +36,11 @@ object KMeans {
       centroids: Array[Array[Double]],
       ssePerIter: Seq[Double])
 
-  private def bind(spark: SparkSession,
-                   cents: Array[Array[Double]]): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_kmeans_cell",
-      es => IvfCellExpr(es.head, cents), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_kmeans_dists",
-      es => IvfDistsExpr(es.head, cents), "scala_udf")
-  }
+  private def embedding = UnresolvedAttribute.quoted("embedding")
+  private def cellOf(cents: Array[Array[Double]]): Column =
+    GraftPlanBridge.column(IvfCellExpr(embedding, cents))
+  private def distsOf(cents: Array[Array[Double]]): Column =
+    GraftPlanBridge.column(IvfDistsExpr(embedding, cents))
 
   /** Deterministic spread seeds: k rows minimizing
     * (hash(vec_id) mod 1009, vec_id). Collect is k rows — bounded. */
@@ -55,18 +52,15 @@ object KMeans {
 
   def train(embeddings: DataFrame, k: Int, iters: Int): Result = {
     require(k > 0 && iters > 0, "k and iters must be positive")
-    val spark = embeddings.sparkSession
     var cents = seeds(embeddings, k)
     require(cents.length == k, s"corpus smaller than k=$k")
     val dim = cents(0).length
     val sses = Seq.newBuilder[Double]
     var it = 0
     while (it < iters) {
-      bind(spark, cents)
       val rows = embeddings
-        .withColumn("cell", expr("graft_kmeans_cell(embedding)"))
-        .withColumn("d2", element_at(
-          expr("graft_kmeans_dists(embedding)"), col("cell") + 1))
+        .withColumn("cell", cellOf(cents))
+        .withColumn("d2", element_at(distsOf(cents), col("cell") + 1))
         .select(col("cell"), col("d2"),
           posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("pos"))
@@ -88,13 +82,12 @@ object KMeans {
       sses += sse
       it += 1
     }
-    bind(spark, cents) // leave the final model bound for assignment
     Result(cents, sses.result())
   }
 
-  /** Corpus with its final cell assignment (call after [[train]]). */
-  def assign(embeddings: DataFrame): DataFrame =
-    embeddings.withColumn("cell", expr("graft_kmeans_cell(embedding)"))
+  /** Corpus with its cell under `centroids` (e.g. [[train]]'s result). */
+  def assign(embeddings: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    embeddings.withColumn("cell", cellOf(centroids))
 
   /** Reference-model geometry (the x37 contract). */
   val ModelK = 8
@@ -116,10 +109,4 @@ object KMeans {
     train(graft.Tables.embeddings(spark, Ivf.trainDir),
       ModelK, ModelIters).centroids
   }
-
-  /** Bind the reference model's kernels into `spark` (training binds
-    * them as a side effect, but a session that only ASSIGNS — e.g. the
-    * x37 query against a new corpus — needs the explicit bind). */
-  def bindReference(spark: SparkSession): Unit =
-    bind(spark, referenceCentroids)
 }

@@ -3,8 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
-
 /** [EXT] Product-quantization (PQ) ANN — the compressed-domain search
   * tier next to hyperplane LSH ([[Ann]]) and IVF cells ([[Ivf]])
   * (SURVEY.md §8). Jégou et al., "Product Quantization for Nearest
@@ -149,7 +147,6 @@ object Pq {
 
   /** Corpus with its PQ codes (one codegen pass, no shuffle). */
   def withCodes(embeddings: DataFrame, embCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     spread(embeddings).withColumn("codes", expr(s"graft_pq_encode($embCol)"))
   }
 
@@ -160,7 +157,6 @@ object Pq {
     * and only the top-k merge crosses partitions. */
   def adcTopK(spark: SparkSession, embeddings: DataFrame,
               queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
     withCodes(embeddings).crossJoin(broadcast(q))
@@ -246,7 +242,6 @@ object Pq {
   def batchAdcTopKForProbes(spark: SparkSession, embeddings: DataFrame,
                             probes0: DataFrame, nProbes: Long,
                             k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val budget = broadcastBudget(spark)
     val canBroadcastFused = nProbes * FusedRowBytes <= budget
     val useTable = nProbes * TableRowBytes <= budget
@@ -299,7 +294,6 @@ object Pq {
   def probeIndex(spark: SparkSession, index: DataFrame,
                  embeddings: DataFrame, queryVecId: Long,
                  k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
     index.crossJoin(broadcast(q))
@@ -324,7 +318,6 @@ object Pq {
   def adcRerankTopK(spark: SparkSession, embeddings: DataFrame,
                     queryVecId: Long, kShort: Int, k: Int): DataFrame = {
     require(kShort >= k, s"shortlist k'=$kShort must be >= k=$k")
-    VectorFunctions.register(spark)
     val shortlist = adcTopK(spark, embeddings, queryVecId, kShort)
     val q = embeddings.filter(col("vec_id") === queryVecId)
       .select(col("embedding").as("q_emb"))
@@ -347,7 +340,6 @@ object Pq {
     * an optional re-rank. */
   def ivfAdcTopK(spark: SparkSession, embeddings: DataFrame,
                  queryVecId: Long, k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val assigned = Ivf.withCell(embeddings)
       .withColumn("codes", expr("graft_pq_encode(embedding)"))
     val probes = assigned.filter(col("vec_id") === queryVecId)
@@ -399,7 +391,6 @@ object Pq {
   def batchIvfAdcTopKForProbes(spark: SparkSession, embeddings: DataFrame,
                                probes0: DataFrame, nProbes: Long,
                                k: Int): DataFrame = {
-    VectorFunctions.register(spark)
     val assigned = Ivf.withCell(embeddings)
       .withColumn("codes", expr("graft_pq_encode(embedding)"))
       .select(col("vec_id"), col("cell"), col("codes"))
@@ -434,7 +425,6 @@ object Pq {
     * micro-units, exact BIGINT sums). The monitoring signal that says
     * when a codebook needs retraining as the corpus drifts. */
   def distortionBySubspace(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.register(embeddings.sparkSession)
     spread(embeddings)
       .select(posexplode(expr("graft_pq_distort(embedding)"))
         .as(Seq("subspace", "dm")))

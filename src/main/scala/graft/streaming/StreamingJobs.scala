@@ -62,7 +62,6 @@ object StreamingJobs {
     * TimestampType regardless of the on-disk encoding ([[canonTs]]).
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val schema: StructType = raw.schema
     // FileStreamSource rejects a bare file path ("basePath must be a
@@ -391,7 +390,6 @@ object StreamingJobs {
     * default no-data micro-batch then flushes the final state. */
   private def eventsStreamFrom(spark: SparkSession, schemaDir: String,
                                glob: String, nDataFiles: Int): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$schemaDir/events.parquet").schema
     val stream = spark.readStream
       .schema(schema)
@@ -469,7 +467,6 @@ object StreamingJobs {
       java.nio.file.Files.copy(src, streamDir.resolve("events_0.parquet")): Unit
       1
     }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val flushFile = stageParquet(
       sentinel(raw), scratch, streamDir, "events_1_flush")
@@ -540,7 +537,6 @@ object StreamingJobs {
     val scratch = java.nio.file.Files.createTempDirectory("graft_upd_stream")
     val streamDir = scratch.resolve("in")
     java.nio.file.Files.createDirectories(streamDir): Unit
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val tsType = raw.schema("ts").dataType
     // boundary literals in the fixture's ON-DISK ts representation
@@ -820,7 +816,6 @@ object StreamingJobs {
     try {
       val streamDir = scratch.resolve("in")
       java.nio.file.Files.createDirectories(streamDir): Unit
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val tsType = raw.schema("ts").dataType
       def bound(iso: String): org.apache.spark.sql.Column = {

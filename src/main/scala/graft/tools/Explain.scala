@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print `explain(formatted)` for the named queries.
   * Usage: runMain graft.tools.Explain <sfDir> <regex>
   */
@@ -9,17 +7,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, pattern) = args
     val re = pattern.r
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      // the plan-audit tool must see the plans Verify/Bench EXECUTE —
-      // same session-build extension registration (a bare session
-      // would print the stock Window plan where they run GroupTopK)
-      .withExtensions(new graft.plans.GraftSparkExtensions())
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the plan-audit tool must see the plans Verify/Bench EXECUTE, so
+    // it runs on their session
+    val spark = graft.DriverSession.build(sfDir).spark
     graft.SparkEntry.queries
       .filter { case (n, _) => re.findFirstIn(n).isDefined }
       .toSeq.sortBy(_._1)

@@ -101,14 +101,7 @@ object ScaleUp {
     require(args.length == 3, "usage: ScaleUp <srcDir> <dstDir> <factor>")
     val Array(srcDir, dstDir, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.DriverSession.build(srcDir).spark
     run(spark, srcDir, dstDir, factor)
     spark.stop()
   }

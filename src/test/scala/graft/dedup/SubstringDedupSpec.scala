@@ -64,7 +64,6 @@ class SubstringDedupSpec extends SparkTestBase {
       .select($"doc_id", $"dup_tokens").as[(Long, Long)].collect().toMap
     // brute force: re-derive coverage by exploding every covered
     // position of every duplicated window and counting distinct
-    graft.functions.DedupFunctions.register(spark)
     val sh = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), posexplode(expr(
         s"""CASE WHEN size(w) >= $K THEN

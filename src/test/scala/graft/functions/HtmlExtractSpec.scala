@@ -108,7 +108,6 @@ class HtmlExtractSpec extends SparkTestBase {
 
   test("fixture domain: kernel equals the reference on every wrapped " +
     "document, boilerplate dropped, body and entity paragraph kept") {
-    HtmlFunctions.register(spark)
     val rows = Tables.documents(spark, sf0001)
       .select(col("doc_id"), expr(graft.queries.TextQueries.HtmlWrapFrag)
         .as("html"))
@@ -202,7 +201,6 @@ class HtmlExtractSpec extends SparkTestBase {
   test("x70 fixture domain: every edge lands on a real document, the " +
     "duplicate edge carries multiplicity 2, the external link is " +
     "dropped") {
-    HtmlFunctions.register(spark)
     val docs = Tables.documents(spark, sf0001)
     val nDocs = docs.count()
     val edges = graft.queries.TextQueries.defs("x70_link_graph")
@@ -289,7 +287,6 @@ class HtmlExtractSpec extends SparkTestBase {
   test("x72 fixture domain: every attributed edge lands on a real " +
     "document with a non-empty cleaned anchor, and the bookmark " +
     "anchor emits nothing") {
-    HtmlFunctions.register(spark)
     val rows = graft.queries.TextQueries.defs("x72_anchor_text")
       .fn(spark, sf0001)
       .as[(Long, Long, String, Long)].collect()
@@ -307,7 +304,6 @@ class HtmlExtractSpec extends SparkTestBase {
   }
 
   test("null propagates, kernel stays inside whole-stage codegen") {
-    HtmlFunctions.register(spark)
     // local relations constant-fold (ConvertToLocalRelation), which is
     // itself proof the expression evaluates; null propagation:
     val df = Seq(Some(s"<p>$longLine</p>"), None).toDF("html")

@@ -43,7 +43,6 @@ class JsonExpressionsSpec extends SparkTestBase {
   }
 
   test("expression matches from_json and get_json_object on the fixture") {
-    JsonFunctions.register(spark)
     val props = Tables.events(spark, sf0001).select(col("props"))
     val cmp = props.select(
       expr("graft_json_scalar(props, 'k')").cast("int").as("mine"),
@@ -57,7 +56,6 @@ class JsonExpressionsSpec extends SparkTestBase {
 
   test("expression participates in codegen (no CodegenFallback marker) " +
     "and survives the interpreted path too") {
-    JsonFunctions.register(spark)
     // range source with a data-dependent json (a constant would fold at
     // optimization time and prove nothing about the generated code)
     val df = spark.range(1)

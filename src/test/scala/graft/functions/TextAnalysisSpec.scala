@@ -7,7 +7,6 @@ class TextAnalysisSpec extends SparkTestBase {
   import spark.implicits._
 
   test("fingerprint: exact polynomial fold") {
-    DedupFunctions.register(spark)
     // "ab" → (0*31+97)*31+98 = 3105
     val fp = Seq("ab").toDF("text")
       .select(TextAnalysis.fingerprint("text")).as[Long].collect().head
@@ -15,7 +14,6 @@ class TextAnalysisSpec extends SparkTestBase {
   }
 
   test("fingerprint is order-sensitive (rolling, not bag-of-chars)") {
-    DedupFunctions.register(spark)
     val fps = Seq("ab", "ba").toDF("text")
       .select(TextAnalysis.fingerprint("text")).as[Long].collect()
     assert(fps(0) != fps(1))

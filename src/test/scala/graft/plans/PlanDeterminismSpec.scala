@@ -65,4 +65,46 @@ class PlanDeterminismSpec extends SparkTestBase {
     assert(s.experimental.extraOptimizations.isEmpty,
       "q93 appended an optimizer rule to shared session state")
   }
+
+  test("operators leave session state as built: conf and function " +
+    "registry unchanged after a sample of the operator surface") {
+    val s = spark.newSession()
+    // a createOrReplaceTempFunction rewrite shows as a changed class name
+    def registry: Set[(String, String)] = {
+      val reg = s.sessionState.functionRegistry
+      reg.listFunction().map(id =>
+        (id.unquotedString, reg.lookupFunction(id).map(_.getClassName).orNull))
+        .toSet
+    }
+    val confBefore = s.conf.getAll.toSet
+    val registryBefore = registry
+
+    graft.Tables.load(s, sf, "orders").count()
+    val tmp = java.nio.file.Files.createTempDirectory("graft_session_state_")
+    val events = tmp.resolve("events.parquet")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sf/events.parquet"), events): Unit
+    graft.operators.Backup.run(s, graft.config.BackupConfig(
+      inputPath = events.toString, outputPath = tmp.resolve("b").toString,
+      from = java.time.Instant.parse("2024-01-05T00:00:00Z"),
+      to = java.time.Instant.parse("2024-01-08T00:00:00Z")),
+      faithfulStrings = true)
+    graft.operators.Restore.run(s, tmp.resolve("b").toString,
+      graft.Tables.loadPath(s, events.toString).schema, "event_type",
+      tmp.resolve("r").toString).count()
+    Seq("x03_minhash_lsh_pairs", "x17_ann_ivf_topk", "s01_stream_tumbling")
+      .foreach(q => graft.SparkEntry.queries(q)(s, sf).collect())
+    graft.operators.BpeTrain.trainOnText(s, graft.Tables.documents(s, sf),
+      "text", 3).collect()
+
+    val confAfter = s.conf.getAll.toSet
+    val registryAfter = registry
+    val drift = Seq(
+      "conf added" -> (confAfter -- confBefore),
+      "conf removed" -> (confBefore -- confAfter),
+      "functions added" -> (registryAfter -- registryBefore),
+      "functions removed" -> (registryBefore -- registryAfter))
+      .filter(_._2.nonEmpty)
+    assert(drift.isEmpty, drift.mkString("\n"))
+  }
 }

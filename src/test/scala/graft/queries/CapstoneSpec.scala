@@ -26,7 +26,6 @@ class CapstoneSpec extends SparkTestBase {
     * share is the staging logic, which is re-derived in plain Scala
     * below. */
   private def perDoc() = {
-    graft.functions.DedupFunctions.register(spark)
     def hashBit(seed: Int, mod: Long) = expr(
       "element_at(graft_hash60_array(array(CAST(doc_id AS STRING)), " +
         s"$seed), 1) % $mod")

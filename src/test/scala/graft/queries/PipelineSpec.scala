@@ -39,7 +39,6 @@ class PipelineSpec extends SparkTestBase {
         $"n_sampled", $"sampled_tokens")
       .as[(String, Long, Long, Long, Long, Long)].collect()
     // independent recompute from collected rows (portable hash included)
-    graft.functions.DedupFunctions.register(spark)
     val raw = graft.Tables.documents(spark, sf0001)
       .select($"source", $"doc_id",
         size(split($"text", " ")).cast("long").as("toks"),

@@ -1,14 +1,12 @@
 package graft.similarity
 
 import graft.{SparkTestBase, Tables}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 class AnnSpec extends SparkTestBase {
   import spark.implicits._
 
   test("graft_cosine: known geometry") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Array(1f, 0f), Array(1f, 0f), 1.0),   // identical
       (Array(1f, 0f), Array(0f, 1f), 0.0),   // orthogonal
@@ -21,7 +19,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("graft_cosine null on zero vector; graft_dot exact") {
-    VectorFunctions.register(spark)
     val df = Seq((Array(0f, 0f), Array(1f, 2f))).toDF("a", "b")
     assert(df.select(expr("graft_cosine(a, b)")).collect().head.isNullAt(0))
     val dot = Seq((Array(1.5f, 2f), Array(2f, 3f))).toDF("a", "b")
@@ -54,7 +51,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("quantizeStats: known scale, half-up tie, zero-vector degenerate") {
-    VectorFunctions.register(spark)
     // maxAbs 127 -> scale 1.0; 63.5 rounds half-UP to 64 -> err 0.5
     val stats = Seq(Tuple1(Array(127f, -127f, 63.5f, 0f)))
       .toDF("embedding")
@@ -88,7 +84,6 @@ class AnnSpec extends SparkTestBase {
     // a pair colliding in several bands must still appear exactly once
     assert(pairs.map(p => (p._1, p._2)).distinct.length == pairs.length)
     // every pair shares at least one band bucket (the candidate contract)
-    VectorFunctions.register(spark)
     val sigs = emb.withColumn("bks",
       expr(s"graft_banded_sig(embedding, ${Ann.DupBands}, ${Ann.DupBandBits})"))
       .select($"vec_id", $"bks").as[(Long, Seq[Int])].collect().toMap
@@ -118,7 +113,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("dupPairs bucket-key space exceeds the old fixed 16-bucket geometry") {
-    VectorFunctions.register(spark)
     val keys = Tables.embeddings(spark, sf0001)
       .withColumn("bks",
         expr(s"graft_banded_sig(embedding, ${Ann.DupBands}, ${Ann.DupBandBits})"))

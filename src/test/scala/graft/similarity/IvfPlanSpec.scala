@@ -67,22 +67,14 @@ class IvfPlanSpec extends SparkTestBase {
     // pins the anchor kernel — a CodegenFallback regression here is a
     // 10-50× interpreted-path cost on every cell-assign/outlier pass.
     val emb = Tables.embeddings(spark, sf0001)
-    // AQE reveals codegen spans only in the FINAL plan (the PqPlanSpec
-    // discipline): run each df before reading its executed plan
-    def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("isFinalPlan=true"), p)
-      p
-    }
     // graft_ivf_cell: the corpus assignment pass under every IVF op
-    val cellPlan = finalPlan(Ivf.withCell(emb))
+    val cellPlan = ranPlan(Ivf.withCell(emb))
     assert(cellPlan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("ivfcellexpr")),
       s"graft_ivf_cell fell out of whole-stage codegen:\n$cellPlan")
     // graft_ivf_dists: the probe-side distance vector (topK/batchTopK)
     // and the outlier score's argmin input
-    val distsPlan = finalPlan(Ivf.outlierScores(emb, topN = 5))
+    val distsPlan = ranPlan(Ivf.outlierScores(emb, topN = 5))
     assert(distsPlan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("ivfdistsexpr")),
       s"graft_ivf_dists fell out of whole-stage codegen:\n$distsPlan")
@@ -91,7 +83,7 @@ class IvfPlanSpec extends SparkTestBase {
     val cb = Ivf.ScaledCodebook(
       Array(Array.fill(Ivf.Dim / 2)(0.0), Array.fill(Ivf.Dim / 2)(1.0)),
       Array(Array.fill(Ivf.Dim / 2)(0.0), Array.fill(Ivf.Dim / 2)(1.0)))
-    val imiPlan = finalPlan(Ivf.withScaledCell(emb, cb))
+    val imiPlan = ranPlan(Ivf.withScaledCell(emb, cb))
     assert(imiPlan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("ivfimicellexpr")),
       s"graft_ivf_imi_cell fell out of whole-stage codegen:\n$imiPlan")

@@ -37,7 +37,6 @@ class IvfScaledSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSet
     }
-    graft.functions.VectorFunctions.register(spark)
     val x = emb.select(col("vec_id").as("x_id"),
       col("embedding").as("x_emb"))
     val y = emb.select(col("vec_id"), col("embedding").as("y_emb"))

@@ -27,7 +27,7 @@ class KMeansSpec extends SparkTestBase {
     assert(r1.ssePerIter.last < r1.ssePerIter.head,
       s"SSE never improved on the seeds: ${r1.ssePerIter}")
 
-    val counts = KMeans.assign(emb).groupBy(col("cell")).count()
+    val counts = KMeans.assign(emb, r1.centroids).groupBy(col("cell")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(counts.keySet == Set(0, 1, 2, 3), s"empty cells: $counts")
     assert(counts.values.sum == emb.count())

@@ -29,10 +29,7 @@ class PqPlanSpec extends SparkTestBase {
   }
 
   test("ADC kernel runs inside WholeStageCodegen") {
-    val df = Pq.adcTopK(spark, Tables.embeddings(spark, sf0001), 0, 10)
-    df.collect() // AQE reveals codegen spans only in the FINAL plan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("isFinalPlan=true"))
+    val plan = ranPlan(Pq.adcTopK(spark, Tables.embeddings(spark, sf0001), 0, 10))
     // `*(n)` is the WholeStageCodegen span marker in compact plan text —
     // both kernel projections must sit inside a span, not fall back
     Seq("pqadcexpr", "pqencodeexpr").foreach { kernel =>

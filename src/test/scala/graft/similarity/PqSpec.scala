@@ -85,7 +85,6 @@ class PqSpec extends SparkTestBase {
     def run(flag: String) = {
       // batchAdcTopK reads the env at call time; tests can't set env,
       // so exercise both variants through their expression forms
-      graft.functions.VectorFunctions.register(spark)
       val probes0 = emb.filter($"vec_id" < 10)
         .select($"vec_id".as("probe_id"), $"embedding".as("q_emb"))
       val (probes, adc) =

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import graft.{SparkTestBase, Tables}
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.functions._
 
 /** Quantifies the recall the banded-LSH occupancy caps trade away
@@ -19,7 +18,6 @@ class RecallSpec extends SparkTestBase {
   private val MinCosine = 0.3 // x24's production threshold
 
   private lazy val exactPairs: Set[(Long, Long)] = {
-    VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf0001)
     val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"))
     val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"))
