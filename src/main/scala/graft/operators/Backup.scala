@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.config.BackupConfig
 import graft.functions.Stringify
-import graft.sources.{BackupMeta, BackupSink, BackupSource, ChunkName,
-  HadoopConfs, WriteFs}
+import graft.sources.{BackupMeta, BackupPlanning, BackupSink, BackupSource,
+  ChunkName, HadoopConfs, WriteFs}
 
 /** The reference's entire pipeline as ONE Catalyst-planned write.
   *
@@ -247,9 +247,11 @@ object Backup {
     * make possible (`cmd/backup.go:309-321`: the name CARRIES the CRC32
     * of the compressed bytes and the row min/max event time): re-derive
     * all three from the bytes on disk and report, per chunk, whether
-    * the file still matches its own name. The chunks are packed into at
-    * most `defaultParallelism` tasks (the rule `BackupSink.publish`
-    * uses), all reading with the session's Hadoop conf, broadcast once.
+    * the file still matches its own name. The chunks are packed into
+    * byte-sized tasks by the connector's read rule
+    * ([[graft.sources.BackupPlanning.pack]], lengths from the layout
+    * listing), all reading with the session's Hadoop conf, broadcast
+    * once.
     * Each chunk is read ONCE, streaming: the CRC32 is taken under the
     * gzip decoder, which yields rows + the envelope — so driver memory
     * is O(#chunks) verdict rows and no chunk is ever held in memory. An
@@ -264,18 +266,17 @@ object Backup {
            partitionColumn: String): DataFrame = {
     val (_, leaves) = BackupSource.layout(root)
     val timeCol = BackupMeta.read(root).fold("ts")(_.timeColumn)
-    val files: Seq[(String, String)] = leaves.flatMap(l =>
-      l.files.map(f => (f, l.values.getOrElse(partitionColumn, null))))
-    val sc = spark.sparkContext
+    val groups = BackupPlanning.pack(spark, leaves.flatMap(_.chunks))
     val conf = HadoopConfs.broadcast()
-    val rdd = sc
-      .parallelize(files,
-        math.max(1, math.min(files.size, sc.defaultParallelism)))
+    // one group per slice: parallelize cuts a Seq of n into n slices of one
+    val rdd = spark.sparkContext
+      .parallelize(groups, math.max(1, groups.size))
       .mapPartitions { it =>
         val hconf = conf.value.value
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        it.map { case (path, partVal) =>
-          fsckChunk(path, partVal, timeCol, hconf, mapper)
+        it.flatten.map { c =>
+          fsckChunk(c.file, c.partValues.getOrElse(partitionColumn, null),
+            timeCol, hconf, mapper)
         }
       }
     spark.createDataFrame(rdd)

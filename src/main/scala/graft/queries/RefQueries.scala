@@ -365,9 +365,9 @@ object RefQueries {
     // its own name (the audit the reference's naming scheme exists to
     // enable, cmd/backup.go:309-321). A healthy backup must report
     // zero bad chunks AND per-partition row totals equal to the source
-    // window — which is exactly what the oracle counts. One task per
-    // chunk; BackupSpec corrupts bytes/names and watches the verdicts
-    // flip.
+    // window — which is exactly what the oracle counts. Chunks are
+    // packed into byte-sized tasks; BackupSpec corrupts bytes/names and
+    // watches the verdicts flip.
     "r21_backup_fsck" -> QueryDef(
       s"""SELECT event_type, count(*) AS n_rows,
          |  0 AS n_unreadable, 0 AS n_crc_bad, 0 AS n_env_bad

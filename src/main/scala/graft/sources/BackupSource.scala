@@ -8,12 +8,14 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -44,9 +46,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    and a query that touches ONLY partition columns (e.g.
   *    per-partition row counts) skips JSON parsing entirely and counts
   *    raw lines.
-  *  - one InputPartition per chunk file: Spark's scheduler gets the
-  *    same work granularity the reference's per-chunk upload loop had,
-  *    so stragglers rebalance naturally.
+  *  - **Byte-sized read partitions**: the surviving chunks are packed
+  *    into InputPartitions by Spark's own file-source split rule
+  *    ([[BackupPlanning.pack]]), so a root of many small chunks runs a
+  *    few tasks of real work instead of one scheduled task per chunk,
+  *    and a large root still keeps at least `defaultParallelism` tasks.
   *
   * Schema: data fields are inferred from a bounded sample (first
   * [[BackupSource.SampleLines]] lines of the first chunk in each of the
@@ -150,8 +154,9 @@ object BackupSource {
       val dirs = children.filter(c => c.isDirectory &&
         c.getPath.getName.contains("="))
       if (dirs.isEmpty) {
-        leaves += Leaf(values,
-          children.filter(isChunkFile).map(_.getPath.toString).sorted.toSeq)
+        val chunks = children.filter(isChunkFile).sortBy(_.getPath.toString)
+        leaves += Leaf(values, chunks.map(_.getPath.toString).toSeq,
+          chunks.map(_.getLen).toSeq)
       } else {
         dirs.sortBy(_.getPath.getName).foreach { d =>
           val Array(k, v) = d.getPath.getName.split("=", 2)
@@ -239,7 +244,24 @@ object BackupSource {
     case _ => StringType
   }
 
-  final case class Leaf(values: Map[String, String], files: Seq[String])
+  /** A leaf directory: its partition values, its chunk files in sorted
+    * (= time) order, and each chunk's on-disk byte length, taken from
+    * the listing or the manifest record that found it (-1 = unknown: a
+    * replay-repair record carries no size). */
+  final case class Leaf(values: Map[String, String], files: Seq[String],
+                        lengths: Seq[Long]) {
+    def chunks: Seq[BackupChunk] =
+      files.lazyZip(lengths).map(BackupChunk(_, values, _))
+  }
+
+  /** Add one manifest entry to a leaf's chunk name → length map. A known
+    * length replaces an unknown (-1) one. True iff the name is new. */
+  def addEntry(names: mutable.TreeMap[String, Long], name: String,
+               length: Long): Boolean = names.get(name) match {
+    case None => names(name) = length; true
+    case Some(-1L) => names(name) = length; false
+    case _ => false
+  }
 
   /** Decode a leaf-relative dir path (`k=v/k2=v2/…`) into partition
     * values, exactly as the walk does (unescape + null sentinel). */
@@ -251,8 +273,8 @@ object BackupSource {
     }.toMap
 
   /** The COMPLETE manifest view of a root — partition columns
-    * (outermost first), leaves with absolute sorted file paths, and
-    * the known on-disk sizes keyed by relative path. Present only
+    * (outermost first) and leaves with absolute sorted file paths and
+    * their recorded on-disk sizes. Present only
     * under the sink's completeness stamp
     * ([[BackupSink.ManifestCompleteStamp]]: the record log has existed
     * since the root last became empty, so every chunk has a record);
@@ -262,13 +284,11 @@ object BackupSource {
     * files instead of listing the whole tree (the walk is O(#files) of
     * driver metadata RPCs, brutal on object stores; the record log is
     * O(#commits) reads, one after self-compaction). */
-  def manifestView(root: String): Option[(Seq[String], Seq[Leaf],
-      Map[String, Long])] = {
+  def manifestView(root: String): Option[(Seq[String], Seq[Leaf])] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(HadoopConfs.active())
     if (!BackupSink.hasCompleteStamp(fs, rootPath)) return None
-    val byLeaf = mutable.HashMap.empty[String, mutable.TreeSet[String]]
-    val sizes = mutable.HashMap.empty[String, Long]
+    val byLeaf = mutable.HashMap.empty[String, mutable.TreeMap[String, Long]]
     var partCols: Seq[String] = Seq.empty
     def ingest(line: String): Unit =
       if (line.nonEmpty && line.contains("/")) {
@@ -278,9 +298,8 @@ object BackupSource {
         if (partCols.isEmpty)
           partCols = leafRel.split("/").filter(_.contains("="))
             .map(_.split("=", 2)(0)).toSeq
-        byLeaf.getOrElseUpdate(leafRel,
-          mutable.TreeSet.empty[String]) += rel.substring(cut + 1)
-        if (bytes >= 0) sizes(rel) = bytes
+        addEntry(byLeaf.getOrElseUpdate(leafRel,
+          mutable.TreeMap.empty[String, Long]), rel.substring(cut + 1), bytes)
       }
     // A record can vanish between the listing and its open when a
     // concurrent sink commit compacts the log (the union record is
@@ -320,16 +339,15 @@ object BackupSource {
     }
     val leaves = byLeaf.toSeq.sortBy(_._1).map { case (leafRel, names) =>
       Leaf(decodeLeafValues(leafRel),
-        names.toSeq.map(n => s"$root/$leafRel/$n"))
+        names.keys.toSeq.map(n => s"$root/$leafRel/$n"), names.values.toSeq)
     }
-    Some((partCols, leaves, sizes.toMap))
+    Some((partCols, leaves))
   }
 
   /** Layout via the complete manifest when present, else the tree
     * walk — the batch-side discovery entry point. */
   def layoutOrManifest(root: String): (Seq[String], Seq[Leaf]) =
-    manifestView(root).map { case (pc, leaves, _) => (pc, leaves) }
-      .getOrElse(layout(root))
+    manifestView(root).getOrElse(layout(root))
 
   // The sink's line format with an optional 0–6 digit fraction: accepts
   // both the fixed-width sink output and a user-typed comparison bound
@@ -394,8 +412,9 @@ object BackupSource {
         s" NULLS ${if (nullsFirst) "FIRST" else "LAST"}"
   }
 
-  /** Pushed ORDER BY … LIMIT n: each reader keeps only its local top-n
-    * in a bounded heap (partial pushdown — Spark's TopN above merges).
+  /** Pushed ORDER BY … LIMIT n: each read partition keeps only its
+    * local top-n in one bounded heap (partial pushdown — Spark's TopN
+    * above merges).
     * Caps the memory a reader may hold. */
   final case class TopNSpec(keys: Seq[TopNKey], limit: Int)
       extends Serializable
@@ -712,9 +731,10 @@ class BackupScanBuilder(path: String, full: StructType, partCols: Seq[String])
     * false): group-by ⊆ partition columns and COUNT(*) / COUNT(partCol)
     * / MIN/MAX(partCol) — everything answerable from the directory
     * layout plus a raw line count, with NO JSON parsing and no per-row
-    * traffic into Spark's aggregate (one partial row per chunk file).
-    * Spark plans the final merge aggregate on top, so multiple chunks
-    * per group are fine. */
+    * traffic into Spark's aggregate: one partial row per chunk file,
+    * each read partition emitting the rows of the chunks packed into
+    * it. Spark plans the final merge aggregate on top, so multiple
+    * chunks per group are fine. */
   override def pushAggregation(agg: Aggregation): Boolean = {
     val groupOk = agg.groupByExpressions.forall(e =>
       refName(e).exists(partSet))
@@ -730,19 +750,19 @@ class BackupScanBuilder(path: String, full: StructType, partCols: Seq[String])
     } else false
   }
 
-  /** Partial limit: each reader stops after `limit` lines (Spark keeps
-    * the global limit above the scan). */
+  /** Partial limit: each read partition stops after `limit` lines,
+    * across its chunks (Spark keeps the global limit above the scan). */
   override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
   override def isPartiallyPushed: Boolean = true
 
   /** Partial TopN (`ORDER BY … LIMIT n`): accepted when every sort key
     * is a plain column of a type the line decoder produces — then each
-    * reader returns only its LOCAL top-n from a bounded heap instead of
-    * every decoded row, and Spark's TopN above merges ≤ n rows per
-    * chunk file. The scan-side sort order is exact (same comparator
-    * semantics), so this is sound for any data; the win at 100 TB is
-    * that the shuffle into the final TopN carries n·#chunks rows, not
-    * the corpus. Refused above [[BackupSource.TopNMaxLimit]] — a huge n
+    * read partition returns only its LOCAL top-n from one bounded heap
+    * over all its chunks instead of every decoded row, and Spark's TopN
+    * above merges ≤ n rows per partition. The scan-side sort order is
+    * exact (same comparator semantics), so this is sound for any data;
+    * the win at 100 TB is that the shuffle into the final TopN carries
+    * n·#partitions rows, not the corpus. Refused above [[BackupSource.TopNMaxLimit]] — a huge n
     * would turn every reader into an n-row buffer and Spark's own sort
     * is the better plan there. */
   override def pushTopN(orders: Array[
@@ -788,7 +808,8 @@ class BackupScanBuilder(path: String, full: StructType, partCols: Seq[String])
   * files whose second-floored `<fromTS>_<toTS>` envelope can't satisfy
   * the time-range residuals. Both prunings happen before any file is
   * opened — at 100 TB a narrow time window over a long-lived backup
-  * touches only its chunks. */
+  * touches only its chunks. The surviving chunks are then packed into
+  * byte-sized read partitions ([[BackupPlanning.pack]]). */
 trait BackupPlanning { self: Scan =>
   import BackupSource._
 
@@ -854,15 +875,17 @@ trait BackupPlanning { self: Scan =>
     * planning and statistics serve from it when present (no tree
     * listing, no per-file stat), else from the pruned walk. Lazy:
     * runtime (DPP) filters arrive after construction, and both paths
-    * apply the filters at [[plannedFiles]] call time. */
+    * apply the filters at [[plannedChunks]] call time. */
   protected lazy val manifestForPlanning
-      : Option[(Seq[String], Seq[BackupSource.Leaf], Map[String, Long])] =
+      : Option[(Seq[String], Seq[BackupSource.Leaf])] =
     BackupSource.manifestView(path)
 
-  protected def plannedFiles(): Seq[BackupFilePartition] = {
+  /** Every chunk that survives [[keep]] and [[keepFile]], with the
+    * length its listing or manifest record gave. */
+  protected def plannedChunks(): Seq[BackupChunk] = {
     val leaves = manifestForPlanning match {
       // complete record log: leaves come off it — zero directory RPCs
-      case Some((_, ls, _)) => ls
+      case Some((_, ls)) => ls
       // mayKeep prunes excluded subtrees DURING the walk (no listing
       // cost for them); keep on the full leaf values stays as the exact
       // decision — identical where both keys are bound, and keep is the
@@ -870,8 +893,48 @@ trait BackupPlanning { self: Scan =>
       case None => BackupSource.layout(path, mayKeep)._2
     }
     leaves.filter(l => keep(l.values))
-      .flatMap(l => l.files.filter(keepFile)
-        .map(f => BackupFilePartition(f, l.values)))
+      .flatMap(_.chunks.filter(c => keepFile(c.file)))
+  }
+
+  /** [[BackupPlanning.pack]] under the planning session. */
+  protected def packed(chunks: Seq[BackupChunk]): Array[InputPartition] =
+    BackupPlanning.pack(SparkSession.active, chunks)
+      .map(g => BackupReadPartition(g): InputPartition).toArray
+}
+
+object BackupPlanning {
+  /** Group chunks into read partitions by Spark's file-source split
+    * rule (`FilePartition.maxSplitBytes` / `getFilePartitions`):
+    * `maxSplitBytes = min(spark.sql.files.maxPartitionBytes,
+    * max(openCostInBytes, totalBytes / minPartitionNum))`, where
+    * `totalBytes` sums every chunk's length plus the open cost and
+    * `minPartitionNum` is `spark.sql.files.minPartitionNum`, else the
+    * leaf-node default parallelism. Chunks are sorted by length,
+    * largest first, and packed next-fit: a group closes when the next
+    * chunk would take it past `maxSplitBytes`, and each chunk charges
+    * its length plus the open cost. A chunk is never split (gzip), so a
+    * chunk above `maxSplitBytes` is a group of its own. An unknown
+    * length (-1) counts as 0. Only existing Spark keys are read. */
+  def pack(spark: SparkSession, chunks: Seq[BackupChunk])
+      : Seq[Seq[BackupChunk]] = {
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    def len(c: BackupChunk): Long = math.max(0L, c.length)
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      chunks.map(len(_) + openCost).sum)
+    val groups = Seq.newBuilder[Seq[BackupChunk]]
+    var current = Vector.empty[BackupChunk]
+    var size = 0L
+    chunks.sortBy(-len(_)).foreach { c =>
+      if (current.nonEmpty && size + len(c) > maxSplit) {
+        groups += current
+        current = Vector.empty
+        size = 0L
+      }
+      current :+= c
+      size += len(c) + openCost
+    }
+    if (current.nonEmpty) groups += current
+    groups.result()
   }
 }
 
@@ -895,7 +958,7 @@ class BackupScan(val path: String, required: StructType,
         s", topN=[${t.keys.mkString(", ")} LIMIT ${t.limit}]").getOrElse("")
 
   override def planInputPartitions(): Array[InputPartition] =
-    plannedFiles().toArray
+    packed(plannedChunks())
 
   override def createReaderFactory(): PartitionReaderFactory =
     new BackupReaderFactory(required, partCols.toSet, taskConf, limit, topN)
@@ -921,27 +984,14 @@ class BackupScan(val path: String, required: StructType,
   /** Post-pruning size: sum of the surviving chunk files' on-disk
     * bytes (compressed). Spark's join planning sees a number that
     * shrinks with pruning, so a filtered backup side can qualify for
-    * broadcast. Sizes come from the manifest records when the log is
-    * complete (the sink counted them at write time) — a per-file stat
-    * here would be O(#files) driver RPCs, WORSE than the listing the
-    * manifest planning just avoided; only record lines written by the
-    * replay-repair path (size unknown, -1) fall back to a stat. */
+    * broadcast. The lengths are the ones partition packing uses: the
+    * manifest records' sizes (the sink counted them at write time) or
+    * the walk's listing — never a per-file stat, which would be
+    * O(#files) driver RPCs. An unknown length (a replay-repair record)
+    * counts as 0. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = {
-      val conf = HadoopConfs.active()
-      val sizes: Map[String, Long] =
-        manifestForPlanning.map(_._3).getOrElse(Map.empty)
-      val rootPath = new Path(path)
-      plannedFiles().map { p =>
-        BackupSink.relativizeChunk(rootPath, p.file)
-          .flatMap(sizes.get)
-          .getOrElse {
-            val hp = new Path(p.file)
-            try hp.getFileSystem(conf).getFileStatus(hp).getLen
-            catch { case _: java.io.IOException => 0L }
-          }
-      }.sum
-    }
+    private lazy val bytes: Long =
+      plannedChunks().map(c => math.max(0L, c.length)).sum
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong =
@@ -952,7 +1002,8 @@ class BackupScan(val path: String, required: StructType,
 /** Scan in pushed-aggregate mode: output schema is the group-by
   * partition columns followed by the aggregate columns (Spark's
   * V2ScanRelationPushDown contract — it re-aggregates these partials
-  * and casts as needed). One output row per surviving chunk file;
+  * and casts as needed). One output row per surviving chunk file, the
+  * chunks packed into read partitions like the row scan's;
   * COUNT comes from a raw line count (no JSON parse), MIN/MAX/COUNT of
   * partition columns from the directory values (no read at all — the
   * line count is skipped too when no COUNT(*) is requested). */
@@ -991,13 +1042,14 @@ class BackupAggScan(val path: String, partCols: Seq[String],
       s"filters=[${(pushed ++ timeFilters).mkString(", ")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = plannedFiles()
-    if (files.isEmpty && groupCols.isEmpty)
+    val chunks = plannedChunks()
+    if (chunks.isEmpty && groupCols.isEmpty)
       // Global aggregate over zero chunks: the final agg is a SUM of
       // partial counts, and SUM over an empty scan is NULL, not 0 — one
-      // synthetic zero-row keeps COUNT(*) = 0 correct.
-      Array(BackupFilePartition(null, Map.empty))
-    else files.toArray
+      // partition of no chunks emits one synthetic zero row and keeps
+      // COUNT(*) = 0 correct.
+      Array(BackupReadPartition(Seq.empty))
+    else packed(chunks)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1007,48 +1059,57 @@ class BackupAggScan(val path: String, partCols: Seq[String],
       private val conf = taskConf
       override def createReader(p: InputPartition)
           : PartitionReader[InternalRow] = {
-        val bp = p.asInstanceOf[BackupFilePartition]
+        val chunks = p.asInstanceOf[BackupReadPartition].chunks
+        // one partial row per chunk; the synthetic empty partition's
+        // zero row has no values and counts no lines
+        val rows =
+          if (chunks.isEmpty) Iterator.single(partial(Map.empty, 0L))
+          else chunks.iterator.map(c => partial(c.partValues, {
+            val r = BackupSource.open(c.file, conf.value.value)
+            try {
+              var n = 0L
+              while (r.readLine() != null) n += 1
+              n
+            } finally r.close()
+          }))
         new PartitionReader[InternalRow] {
-          private var done = false
-          override def next(): Boolean = if (done) false else { done = true; true }
-          override def get(): InternalRow = {
-            lazy val lines: Long = {
-              if (bp.file == null) 0L
-              else {
-                val r = BackupSource.open(bp.file, conf.value.value)
-                try {
-                  var n = 0L
-                  while (r.readLine() != null) n += 1
-                  n
-                } finally r.close()
-              }
-            }
-            def pv(c: String): String = bp.partValues.get(c).orNull
-            val row = new GenericInternalRow(groups.length + specs.length)
-            groups.zipWithIndex.foreach { case (g, i) =>
-              val v = pv(g)
-              row.update(i, if (v == null) null else UTF8String.fromString(v))
-            }
-            specs.zipWithIndex.foreach { case ((kind, c), i) =>
-              val j = groups.length + i
-              kind match {
-                case 0 => row.update(j, lines)
-                case 1 => row.update(j, if (pv(c) == null) 0L else lines)
-                case _ =>
-                  val v = pv(c)
-                  row.update(j, if (v == null) null else UTF8String.fromString(v))
-              }
-            }
-            row
-          }
+          private var row: InternalRow = _
+          override def next(): Boolean =
+            rows.hasNext && { row = rows.next(); true }
+          override def get(): InternalRow = row
           override def close(): Unit = ()
         }
+      }
+
+      /** One chunk's partial row; `lines` is read only by a count. */
+      private def partial(values: Map[String, String],
+                          lines: => Long): InternalRow = {
+        lazy val n = lines
+        def pv(c: String): UTF8String =
+          UTF8String.fromString(values.getOrElse(c, null))
+        val row = new GenericInternalRow(groups.length + specs.length)
+        groups.zipWithIndex.foreach { case (g, i) => row.update(i, pv(g)) }
+        specs.zipWithIndex.foreach { case ((kind, c), i) =>
+          val j = groups.length + i
+          kind match {
+            case 0 => row.update(j, n)
+            case 1 => row.update(j, if (pv(c) == null) 0L else n)
+            case _ => row.update(j, pv(c))
+          }
+        }
+        row
       }
     }
 }
 
-final case class BackupFilePartition(file: String,
-                                     partValues: Map[String, String])
+/** One chunk file of a read partition, with the partition values of its
+  * leaf and its on-disk byte length (-1 = unknown). */
+final case class BackupChunk(file: String, partValues: Map[String, String],
+                             length: Long)
+
+/** A read partition: the chunks [[BackupPlanning.pack]] grouped, read
+  * in order by one task. */
+final case class BackupReadPartition(chunks: Seq[BackupChunk])
     extends InputPartition
 
 class BackupReaderFactory(required: StructType, partCols: Set[String],
@@ -1056,17 +1117,11 @@ class BackupReaderFactory(required: StructType, partCols: Set[String],
                           limit: Option[Int] = None,
                           topN: Option[BackupSource.TopNSpec] = None)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val bp = p.asInstanceOf[BackupFilePartition]
-    new BackupPartitionReader(bp, required, partCols, conf.value.value,
-      limit, topN)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new BackupPartitionReader(p.asInstanceOf[BackupReadPartition], required,
+      partCols, conf.value.value, limit, topN)
 }
 
-/** Streams one chunk file. Per required field, the extraction is fixed
-  * at construction: partition fields come from the directory values
-  * (constant per file), data fields from the per-line JSON. When no
-  * data field is required the JSON parse is skipped entirely. */
 /** Streaming offset: per-leaf-directory chunk-file counts (sorted-name
   * order), JSON-serialized. Resumable from a checkpoint without any
   * source-side log: the directory tree IS the log.
@@ -1100,8 +1155,9 @@ object BackupOffset {
 /** Micro-batch tail of a growing backup: each trigger lists the leaf
   * directories (driver-side metadata, O(#dirs)), takes every leaf's
   * sorted file list, and plans the per-leaf suffix past the previous
-  * offset — one InputPartition per new chunk file, decoded by the same
-  * pruned-column reader as the batch path. Pairs with the DSv2 sink's
+  * offset — the new chunks packed into byte-sized read partitions by
+  * the batch path's rule ([[BackupPlanning.pack]]) and decoded by the
+  * same pruned-column reader. Pairs with the DSv2 sink's
   * append mode / `Backup.incremental`: the write side appends
   * later-window chunks, the read side picks up exactly those. */
 class BackupMicroBatchStream(val path: String, required: StructType,
@@ -1159,7 +1215,8 @@ class BackupMicroBatchStream(val path: String, required: StructType,
     * r13 PLANS lever: ~800 k chunks at the next decade would otherwise
     * cost ~14 s of re-listing per trigger). */
   private case class LeafSnap(mtime: Long, firstObservedAt: Long,
-                              listedAt: Long, files: Seq[String])
+                              listedAt: Long, files: Seq[String],
+                              lengths: Seq[Long])
   private val leafCache =
     scala.collection.mutable.HashMap.empty[String, LeafSnap]
   /** ≥ any real filesystem's mtime granularity (FAT 2 s is the worst). */
@@ -1219,7 +1276,7 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   // half-published chunks are INVISIBLE here until their epoch marker
   // promotes (the walk could see them pre-rollback).
   //
-  // State is per-leaf sorted chunk NAME sets — names, not full paths,
+  // State is per-leaf sorted chunk NAME → length maps — names, not full paths,
   // so walk-seeded and record-fed entries dedup and order identically
   // (full paths are re-derived as `<root>/<leafKey>/<name>`, which any
   // FileSystem opens regardless of how the walk's listStatus qualified
@@ -1234,7 +1291,7 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   private val manifestSeen = scala.collection.mutable.HashSet.empty[String]
   private val manifestLeaves = scala.collection.mutable.HashMap
     .empty[String, (Map[String, String],
-      scala.collection.mutable.TreeSet[String])]
+      scala.collection.mutable.TreeMap[String, Long])]
   // Served-view cache: rebuilding every leaf's path list per trigger
   // would be O(#files) of driver string work (measured 161 ms at 69 k
   // chunks — ~2 s at the 800 k decade); only leaves touched by new
@@ -1266,14 +1323,14 @@ class BackupMicroBatchStream(val path: String, required: StructType,
           var line = in.readLine()
           while (line != null) {
             if (line.nonEmpty && line.contains("/")) {
-              val (rel, _) = BackupSink.parseManifestLine(line)
+              val (rel, bytes) = BackupSink.parseManifestLine(line)
               val cut = rel.lastIndexOf('/')
               val leafRel = rel.substring(0, cut)
               val chunkName = rel.substring(cut + 1)
               val (_, names) = manifestLeaves.getOrElseUpdate(leafRel,
                 (decodeLeafValues(leafRel),
-                  scala.collection.mutable.TreeSet.empty[String]))
-              if (names.add(chunkName)) manifestDirty += leafRel
+                  scala.collection.mutable.TreeMap.empty[String, Long]))
+              if (addEntry(names, chunkName, bytes)) manifestDirty += leafRel
             }
             line = in.readLine()
           }
@@ -1291,8 +1348,9 @@ class BackupMicroBatchStream(val path: String, required: StructType,
     manifestDirty.foreach { leafRel =>
       manifestLeaves.get(leafRel).foreach { case (values, names) =>
         if (keep(values) && names.nonEmpty)
-          manifestView(leafRel) =
-            Leaf(values, names.toSeq.map(n => s"$path/$leafRel/$n"))
+          manifestView(leafRel) = Leaf(values,
+            names.keys.toSeq.map(n => s"$path/$leafRel/$n"),
+            names.values.toSeq)
       }
     }
     manifestDirty.clear()
@@ -1322,10 +1380,10 @@ class BackupMicroBatchStream(val path: String, required: StructType,
     }
     if (!fs.exists(rootPath)) return Seq.empty
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Leaf)]
-    def emit(dir: Path, values: Map[String, String],
-             files: Seq[String]): Unit =
+    def emit(dir: Path, values: Map[String, String], files: Seq[String],
+             lengths: Seq[Long]): Unit =
       if (keep(values) && files.nonEmpty)
-        out += leafKeyFromDir(dir) -> Leaf(values, files)
+        out += leafKeyFromDir(dir) -> Leaf(values, files, lengths)
     def walk(p: Path, mtime: Long, values: Map[String, String]): Unit = {
       leafCache.get(p.toString) match {
         case Some(c) if mtimeReliable && mtime > 0L && c.mtime == mtime &&
@@ -1334,14 +1392,16 @@ class BackupMicroBatchStream(val path: String, required: StructType,
           // stamp's granularity window had provably closed (driver
           // clock both sides — see the cache doc for why this is
           // skew-proof): file set proven current — no listStatus
-          emit(p, values, c.files)
+          emit(p, values, c.files, c.lengths)
         case cached =>
           val children = fs.listStatus(p)
           val dirs = children.filter(c => c.isDirectory &&
             c.getPath.getName.contains("="))
           if (dirs.isEmpty) {
-            val files = children.filter(isChunkFile)
-              .map(_.getPath.toString).sorted.toSeq
+            val chunks = children.filter(isChunkFile)
+              .sortBy(_.getPath.toString)
+            val files = chunks.map(_.getPath.toString).toSeq
+            val lengths = chunks.map(_.getLen).toSeq
             // same stamp as the cached entry → keep its first-observed
             // time (this listing may be the one that closes the window).
             // A NEW stamp's firstObservedAt must be THIS listing's own
@@ -1355,8 +1415,8 @@ class BackupMicroBatchStream(val path: String, required: StructType,
               case _ => listedNow
             }
             leafCache(p.toString) =
-              LeafSnap(mtime, first, listedNow, files)
-            emit(p, values, files)
+              LeafSnap(mtime, first, listedNow, files, lengths)
+            emit(p, values, files, lengths)
           } else {
             // interior: never cached (child changes don't touch p's
             // mtime); recurse only into subtrees the filters may keep
@@ -1381,9 +1441,9 @@ class BackupMicroBatchStream(val path: String, required: StructType,
     if (fs.exists(new Path(rootPath, BackupSink.ManifestDir))) {
       out.foreach { case (leafRel, leaf) =>
         val (_, names) = manifestLeaves.getOrElseUpdate(leafRel,
-          (leaf.values, scala.collection.mutable.TreeSet.empty[String]))
-        leaf.files.foreach { f =>
-          if (names.add(new Path(f).getName)) manifestDirty += leafRel
+          (leaf.values, scala.collection.mutable.TreeMap.empty[String, Long]))
+        leaf.files.zip(leaf.lengths).foreach { case (f, n) =>
+          if (addEntry(names, new Path(f).getName, n)) manifestDirty += leafRel
         }
       }
       readNewManifestRecords(fs, rootPath)
@@ -1416,7 +1476,7 @@ class BackupMicroBatchStream(val path: String, required: StructType,
     * residuals would silently re-read or skip chunks (filters are also
     * seconds-floored best-effort, the wrong thing to bake into an
     * exactly-once position). The pruning still happens where it
-    * matters: `filter(keepFile)` runs on the sliced batch BEFORE any
+    * matters: `keepFile` runs on the sliced batch BEFORE any
     * partition is created, so a time-windowed tail never opens, plans,
     * or ships a chunk whose name envelope can't match — the only cost
     * of the unfiltered counts is integers counting skipped names.
@@ -1433,12 +1493,13 @@ class BackupMicroBatchStream(val path: String, required: StructType,
       // prefix under append-monotonicity makes the counts sufficient
       case _ => tailLeaves()
     }
-    leaves.flatMap { case (k, l) =>
+    packed(leaves.flatMap { case (k, l) =>
       val from = s.getOrElse(k, 0)
       val to = math.min(e.getOrElse(k, 0), l.files.length)
-      l.files.slice(from, to).filter(keepFile)
-        .map(f => BackupFilePartition(f, l.values))
-    }.toArray
+      // slice before building chunks: a leaf's backlog is never touched
+      l.copy(files = l.files.slice(from, to),
+        lengths = l.lengths.slice(from, to)).chunks.filter(c => keepFile(c.file))
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -1448,59 +1509,85 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   override def stop(): Unit = ()
 }
 
-class BackupPartitionReader(p: BackupFilePartition, required: StructType,
+/** Streams the chunks of one read partition, in order. Per required
+  * field, the extraction kind is fixed at construction: partition fields
+  * and the `_chunk_*` provenance columns are per-chunk constants,
+  * switched at each chunk boundary; data fields come from the per-line
+  * JSON. When no data field is required the JSON parse is skipped
+  * entirely. A pushed limit caps the partition, and a pushed TopN keeps
+  * one bounded heap for the partition. */
+class BackupPartitionReader(p: BackupReadPartition, required: StructType,
                             partCols: Set[String], conf: Configuration,
                             limit: Option[Int] = None,
                             topN: Option[BackupSource.TopNSpec] = None)
     extends PartitionReader[InternalRow] {
   import BackupSource._
 
-  private val reader = open(p.file, conf)
   private val mapper = new ObjectMapper()
   private val maxLines: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
   private var emitted = 0L
 
-  // Left(constant partition value) | Right((json field, type)).
-  // Reserved provenance names resolve to per-file constants — no
-  // JSON parse, and they shadow same-named JSON fields (documented).
-  private val extractors: Array[Either[Any, (String, DataType)]] =
+  private val needsParse = required.fields.exists(f =>
+    !partCols(f.name) && !MetaColNames.contains(f.name))
+  private val chunks = p.chunks.iterator
+  private var reader: java.io.BufferedReader = _
+
+  // Left(per-chunk constant) | Right((json field, type)). Reserved
+  // provenance names resolve to per-chunk constants — no JSON parse,
+  // and they shadow same-named JSON fields (documented).
+  private var extractors: Array[Either[Any, (String, DataType)]] = _
+
+  private def extractorsFor(c: BackupChunk)
+      : Array[Either[Any, (String, DataType)]] = {
+    lazy val name = ChunkName.parse(new Path(c.file).getName)
     required.fields.map { f =>
       if (partCols(f.name)) {
-        val v = p.partValues.get(f.name).orNull
-        Left(if (v == null) null else UTF8String.fromString(v))
+        Left(UTF8String.fromString(c.partValues.getOrElse(f.name, null)))
       } else if (f.name == "_chunk_file") {
-        Left(if (p.file == null) null else UTF8String.fromString(p.file))
+        Left(UTF8String.fromString(c.file))
       } else if (f.name == "_chunk_from" || f.name == "_chunk_to") {
-        val name = if (p.file == null) "" else new Path(p.file).getName
-        val v = ChunkName.parse(name)
-          .map(n => if (f.name == "_chunk_from") n.from else n.to)
-          .orNull
-        Left(if (v == null) null else UTF8String.fromString(v))
+        Left(UTF8String.fromString(name
+          .map(n => if (f.name == "_chunk_from") n.from else n.to).orNull))
       } else Right((f.name, f.dataType))
     }
-  private val needsParse = extractors.exists(_.isRight)
+  }
+
+  /** The next line of the partition, crossing chunk boundaries: at the
+    * end of a chunk, close it, open the next and switch the per-chunk
+    * constants. Null when every chunk is read. */
+  private def readLine(): String = {
+    var l = if (reader == null) null else reader.readLine()
+    while (l == null && chunks.hasNext) {
+      close()
+      val c = chunks.next()
+      extractors = extractorsFor(c)
+      reader = open(c.file, conf)
+      l = reader.readLine()
+    }
+    l
+  }
 
   private var line: String = _
   private var row: InternalRow = _
 
-  // Pushed TopN: drain the file into a bounded heap (worst of the kept
-  // set at the head, via the reversed comparator), then serve the
-  // survivors in sorted order. The reader holds ≤ limit decoded rows —
-  // bounded by TopNMaxLimit at pushdown time — and emits ≤ limit rows
-  // into Spark's merging TopN, instead of every line in the chunk.
+  // Pushed TopN: drain the partition into one bounded heap (worst of
+  // the kept set at the head, via the reversed comparator), then serve
+  // the survivors in sorted order. The reader holds ≤ limit decoded
+  // rows — bounded by TopNMaxLimit at pushdown time — and emits ≤ limit
+  // rows into Spark's merging TopN, instead of every line it read.
   private val topRows: java.util.Iterator[InternalRow] = topN match {
     case None => null
     case Some(spec) =>
       val cmp = topNComparator(spec, required)
       val pq = new java.util.PriorityQueue[InternalRow](
         math.min(spec.limit + 1, 1024), cmp.reversed())
-      var l = reader.readLine()
+      var l = readLine()
       while (l != null) {
         pq.offer(decode(l)): Unit
         if (pq.size > spec.limit) pq.poll(): Unit
-        l = reader.readLine()
+        l = readLine()
       }
-      reader.close()
+      close()
       val arr = pq.toArray(new Array[InternalRow](pq.size))
       java.util.Arrays.sort(arr, cmp)
       java.util.Arrays.asList(arr: _*).iterator()
@@ -1512,10 +1599,10 @@ class BackupPartitionReader(p: BackupFilePartition, required: StructType,
       row = topRows.next()
       true
     } else {
-      // Partial limit pushdown: per-reader cap; Spark's global Limit
+      // Partial limit pushdown: per-partition cap; Spark's global Limit
       // above the scan enforces exactness across partitions.
       if (emitted >= maxLines) return false
-      line = reader.readLine()
+      line = readLine()
       if (line != null) emitted += 1
       line != null
     }
@@ -1551,5 +1638,6 @@ class BackupPartitionReader(p: BackupFilePartition, required: StructType,
     row
   }
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit =
+    if (reader != null) { reader.close(); reader = null }
 }

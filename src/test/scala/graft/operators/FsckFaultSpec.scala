@@ -9,7 +9,7 @@ import java.util.zip.{CRC32, GZIPInputStream, GZIPOutputStream}
 
 import graft.SparkTestBase
 import graft.config.BackupConfig
-import graft.sources.{BackupScan, ChunkName}
+import graft.sources.{BackupScan, ChunkName, PlannedChunks}
 
 /** Fault verdicts of [[Backup.fsck]]'s single read per chunk: the CRC
   * covers every byte of a chunk whether or not it decodes. */
@@ -123,7 +123,8 @@ class FsckFaultSpec extends SparkTestBase {
       val df = spark.read.format("graftbackup").load(root).filter(pred)
       df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-          r.scan.asInstanceOf[BackupScan].planInputPartitions().length
+          PlannedChunks(r.scan.asInstanceOf[BackupScan]
+            .planInputPartitions()).length
       }.sum
     }
     assert(planned("ts >= '2024-02-01 00:00:10'") == 2)

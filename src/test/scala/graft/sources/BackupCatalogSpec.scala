@@ -55,8 +55,7 @@ class BackupCatalogSpec extends SparkTestBase {
         r.scan.asInstanceOf[BackupScan]
     }
     assert(scans.size == 1)
-    val planned = scans.head.planInputPartitions()
-      .map(_.asInstanceOf[BackupFilePartition])
+    val planned = PlannedChunks(scans.head.planInputPartitions())
     assert(planned.nonEmpty &&
       planned.forall(_.partValues("event_type") == "click"))
   }

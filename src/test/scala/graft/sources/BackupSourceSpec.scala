@@ -52,15 +52,14 @@ class BackupSourceSpec extends SparkTestBase {
         r.scan.asInstanceOf[BackupScan]
     }
     assert(scans.size == 1, "expected the graftbackup scan in the plan")
-    val planned = scans.head.planInputPartitions()
-      .map(_.asInstanceOf[BackupFilePartition])
+    val planned = PlannedChunks(scans.head.planInputPartitions())
     assert(planned.nonEmpty)
     assert(planned.forall(_.partValues("event_type") == "click"),
       "non-matching partitions must not be planned")
-    val all = new BackupScan(outDir,
+    val all = PlannedChunks(new BackupScan(outDir,
       scans.head.readSchema(), Seq("event_type", "date_dir"), Array.empty,
       None, Array.empty, None)
-      .planInputPartitions()
+      .planInputPartitions())
     assert(planned.length < all.length,
       "pruned plan must cover fewer files than the full listing")
     // and the filter is reported as pushed
@@ -98,8 +97,7 @@ class BackupSourceSpec extends SparkTestBase {
         r.scan.asInstanceOf[BackupScan]
     }
     assert(scans.size == 1)
-    val planned = scans.head.planInputPartitions()
-      .map(_.asInstanceOf[BackupFilePartition])
+    val planned = PlannedChunks(scans.head.planInputPartitions())
     assert(planned.nonEmpty)
     assert(planned.forall(_.partValues("uid_bucket") == "2"))
     assert(planned.map(_.partValues("event_type")).distinct.length == 5,
@@ -136,8 +134,7 @@ class BackupSourceSpec extends SparkTestBase {
       "absorbable predicates must be consumed; the function predicate " +
         "must come back for post-scan evaluation")
     assert(sb.pushedPredicates().toSeq == Seq(eq, in))
-    val planned = sb.build().toBatch.planInputPartitions()
-      .map(_.asInstanceOf[BackupFilePartition])
+    val planned = PlannedChunks(sb.build().toBatch.planInputPartitions())
     assert(planned.nonEmpty)
     assert(planned.forall(p => p.partValues("event_type") == "click" &&
       Set("20240105", "20240106")(p.partValues("date_dir"))))
@@ -174,7 +171,7 @@ class BackupSourceSpec extends SparkTestBase {
     assert(aggScans.size == 1,
       "groupBy(partitionCol).count() must plan the pushed-aggregate scan")
     // one partial row per chunk file, not per data row
-    val partials = aggScans.head.planInputPartitions().length
+    val partials = PlannedChunks(aggScans.head.planInputPartitions()).length
     val rows = spark.read.format("graftbackup").load(outDir).count()
     assert(partials < rows, s"agg scan emits $partials partials for $rows rows")
     // correctness: counts match the source table
@@ -218,10 +215,10 @@ class BackupSourceSpec extends SparkTestBase {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan.asInstanceOf[BackupScan]
     }
-    val planned = scans.head.planInputPartitions().length
-    val all = new BackupScan(outDir, scans.head.readSchema(),
+    val planned = PlannedChunks(scans.head.planInputPartitions()).length
+    val all = PlannedChunks(new BackupScan(outDir, scans.head.readSchema(),
       Seq("event_type", "date_dir"), Array.empty, None, Array.empty, None)
-      .planInputPartitions().length
+      .planInputPartitions()).length
     assert(planned < all,
       s"narrow time window must skip chunk files ($planned of $all planned)")
     // losslessness: same rows as a full scan + exact filter
@@ -294,13 +291,12 @@ class BackupSourceSpec extends SparkTestBase {
         r.scan.asInstanceOf[BackupScan]
     }
     val scan = scans.head
-    val before = scan.planInputPartitions().length
+    val before = PlannedChunks(scan.planInputPartitions()).length
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("event_type", Array("click"))))
-    val after = scan.planInputPartitions()
+    val after = PlannedChunks(scan.planInputPartitions())
     assert(after.length < before)
-    assert(after.map(_.asInstanceOf[BackupFilePartition])
-      .forall(_.partValues("event_type") == "click"))
+    assert(after.forall(_.partValues("event_type") == "click"))
   }
 
   test("statistics report post-pruning on-disk bytes") {
@@ -418,8 +414,11 @@ class BackupSourceSpec extends SparkTestBase {
       new org.apache.hadoop.fs.Path(dir).getFileSystem(
         spark.sessionState.newHadoopConf()),
       new org.apache.hadoop.fs.Path(dir)))
-    val (partCols, leaves, sizes) = BackupSource.manifestView(dir).get
+    val (partCols, leaves) = BackupSource.manifestView(dir).get
     assert(partCols == Seq("event_type", "date_dir"))
+    val sizes = leaves.flatMap(l => l.files.zip(l.lengths)).map {
+      case (f, n) => f.stripPrefix(dir).stripPrefix("/") -> n
+    }.toMap
     // every chunk on disk has a record with its EXACT on-disk size
     // (counted by the task writer — statistics never stat a file)
     val onDisk = new java.io.File(dir).listFiles().filter(_.isDirectory)

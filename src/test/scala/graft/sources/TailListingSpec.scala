@@ -59,7 +59,7 @@ class TailListingSpec extends SparkTestBase {
     assert(off.counts.nonEmpty &&
       off.counts.keySet.forall(_.startsWith("event_type=click/")),
       s"filtered offset leaked other partitions: ${off.counts.keySet}")
-    val parts = s.planInputPartitions(s.initialOffset(), off)
+    val parts = PlannedChunks(s.planInputPartitions(s.initialOffset(), off))
     assert(parts.length == off.counts.values.sum)
   }
 
@@ -120,10 +120,10 @@ class TailListingSpec extends SparkTestBase {
     assert((off4.counts - leafKey) == (off1.counts - leafKey))
 
     // the new file is exactly what the next batch plans
-    val parts = s.planInputPartitions(BackupOffset(off1.counts), off4)
+    val parts = PlannedChunks(
+      s.planInputPartitions(BackupOffset(off1.counts), off4))
     assert(parts.length == 1)
-    assert(parts.head.asInstanceOf[BackupFilePartition]
-      .file.endsWith("deadbeef.json.gz"))
+    assert(parts.head.file.endsWith("deadbeef.json.gz"))
   }
 
   test("a fresh cache entry (age within the safety window) is " +
@@ -249,8 +249,7 @@ class TailListingSpec extends SparkTestBase {
 
     // the increment plans exactly the recorded new chunks — never the
     // planted file — and every planned path opens
-    val parts = s.planInputPartitions(off2, off3)
-      .map(_.asInstanceOf[BackupFilePartition])
+    val parts = PlannedChunks(s.planInputPartitions(off2, off3))
     assert(parts.length == added)
     assert(!parts.exists(_.file.contains("deadbeef")))
     parts.foreach(p => assert(
@@ -304,9 +303,10 @@ class TailListingSpec extends SparkTestBase {
     assert(offF.counts == offP.counts,
       "time filters leaked into the offset accounting")
 
-    val parts = filtered.planInputPartitions(
-      filtered.initialOffset(), offF).map(_.asInstanceOf[BackupFilePartition])
-    val all = plain.planInputPartitions(plain.initialOffset(), offP)
+    val parts = PlannedChunks(filtered.planInputPartitions(
+      filtered.initialOffset(), offF))
+    val all = PlannedChunks(
+      plain.planInputPartitions(plain.initialOffset(), offP))
     assert(parts.length < all.length,
       "zone maps pruned nothing — fixture must span the bound")
     assert(parts.nonEmpty)
@@ -314,7 +314,7 @@ class TailListingSpec extends SparkTestBase {
     val boundUs = BackupSource.boundMicros(bound).get
     val plannedNames = parts.map(p =>
       new org.apache.hadoop.fs.Path(p.file).getName).toSet
-    all.map(_.asInstanceOf[BackupFilePartition]).foreach { p =>
+    all.foreach { p =>
       val name = new org.apache.hadoop.fs.Path(p.file).getName
       ChunkName.parse(name).map(_.rangeMicros).foreach { case (_, hi) =>
         if (plannedNames.contains(name))
@@ -341,8 +341,7 @@ class TailListingSpec extends SparkTestBase {
       new StructType().add("event_type", "string"),
       Seq("event_type", "date_dir"), Array.empty, None, Array.empty)
     val off = s.latestOffset().asInstanceOf[BackupOffset]
-    val parts = s.planInputPartitions(s.initialOffset(), off)
-      .map(_.asInstanceOf[BackupFilePartition])
+    val parts = PlannedChunks(s.planInputPartitions(s.initialOffset(), off))
     assert(parts.nonEmpty)
     parts.foreach(p => assert(
       new java.io.File(p.file.stripPrefix("file:")).exists(),
