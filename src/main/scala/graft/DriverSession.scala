@@ -128,17 +128,16 @@ object DriverSession {
   }
 
   /** Stop the local ChecksumFileSystem writing `.crc` sidecars for
-    * Spark's OWN local writes (parquet/ORC outputs such as Restore's,
-    * streaming checkpoints and state stores). Without libhadoop every
-    * file create on that filesystem forks a `chmod`
-    * (Shell.execCommand) — thread dumps of streaming stagers once
-    * showed 32/32 task threads blocked on process spawn — and the
-    * sidecars double the file count. Connector writes no longer go
-    * through this instance: graftbackup writes use
-    * [[graft.sources.WriteFs]], which sets modes in-process and keeps
-    * its sidecars, so this setting does not reach them. Mutates the
-    * CACHED file:/// instance, which local[*] executors share;
-    * replacing the fs class outright (fs.file.impl =
+    * Spark's OWN local file writes (parquet/ORC outputs such as
+    * Restore's). Without libhadoop every file create on that
+    * filesystem forks a `chmod` (Shell.execCommand) and the sidecars
+    * double the file count. Connector writes, streaming checkpoints and
+    * state stores do not go through this instance: graftbackup writes
+    * use [[graft.sources.WriteFs]] and checkpoint files
+    * [[graft.sources.WriteFsCheckpointFileManager]], which set modes
+    * in-process and keep their sidecars, so this setting does not reach
+    * them. Mutates the CACHED file:/// instance, which local[*]
+    * executors share; replacing the fs class outright (fs.file.impl =
     * RawLocalFileSystem) is NOT equivalent — it breaks RocksDB
     * state-store commits, which need the checksum fs's create/rename
     * semantics. On a real cluster (HDFS/S3A + native IO) neither the

@@ -6,13 +6,15 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.Tables
 import graft.config.BackupConfig
 import graft.functions.Stringify
 import graft.sources.{BackupMeta, BackupPlanning, BackupSink, BackupSource,
-  ChunkName, HadoopConfs, WriteFs}
+  ChunkName, HadoopConfs, LineDecoder, WriteFs}
 
 /** The reference's entire pipeline as ONE Catalyst-planned write.
   *
@@ -273,20 +275,19 @@ object Backup {
       .parallelize(groups, math.max(1, groups.size))
       .mapPartitions { it =>
         val hconf = conf.value.value
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        val times = new LineDecoder(Array((timeCol, 0, StringType)))
         it.flatten.map { c =>
           fsckChunk(c.file, c.partValues.getOrElse(partitionColumn, null),
-            timeCol, hconf, mapper)
+            hconf, times)
         }
       }
     spark.createDataFrame(rdd)
   }
 
   /** One chunk's verdict from one read of its bytes (see [[fsck]]). */
-  private def fsckChunk(path: String, partVal: String, timeCol: String,
+  private def fsckChunk(path: String, partVal: String,
                         conf: org.apache.hadoop.conf.Configuration,
-                        mapper: com.fasterxml.jackson.databind.ObjectMapper)
-      : FsckRow = {
+                        times: LineDecoder): FsckRow = {
     val p = new Path(path)
     val crc = new CRC32()
     var rows = 0L
@@ -302,12 +303,15 @@ object Backup {
       var r: java.io.BufferedReader = null
       try {
         r = BackupSource.reader(path, in)
+        val time = new GenericInternalRow(1)
         var line = r.readLine()
         while (line != null) {
           rows += 1
-          val v = mapper.readTree(line).get(timeCol)
-          if (v != null && !v.isNull) {
-            val t = java.time.LocalDateTime.parse(v.asText(), LineTsFmt)
+          time.update(0, null)
+          times.into(line, time)
+          if (!time.isNullAt(0)) {
+            val t = java.time.LocalDateTime.parse(
+              time.getUTF8String(0).toString, LineTsFmt)
             if (minT == null || t.isBefore(minT)) minT = t
             if (maxT == null || t.isAfter(maxT)) maxT = t
           }

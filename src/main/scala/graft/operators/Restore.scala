@@ -141,6 +141,8 @@ object Restore {
       unstringify(col(f.name), f.dataType).as(f.name)
     }: _*)
     typed.write.mode("overwrite").parquet(outputPath)
-    spark.read.parquet(outputPath)
+    // read back with the schema just written: inferring it from the
+    // footers would run one more job
+    spark.read.schema(typed.schema).parquet(outputPath)
   }
 }

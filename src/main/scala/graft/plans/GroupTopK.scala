@@ -267,10 +267,21 @@ object GroupTopK {
   * It is the only registration route. This is the deployment story
   * for a shared cluster: ship the jar, set the conf, and `expr(
   * "graft_cosine(a, b)")` / SQL `SELECT graft_json_scalar(...)` work in
-  * every notebook and job. */
+  * every notebook and job. The same build names
+  * [[graft.sources.WriteFsCheckpointFileManager]] as the streaming
+  * checkpoint file manager, unless one is configured already. */
 class GraftSparkExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    // the parser is the one extension point built eagerly with the
+    // session's state; the hook leaves it unchanged. The key goes on the
+    // SparkContext's Hadoop conf: setting the SQL conf here would
+    // re-enter the state being built.
+    ext.injectParser { (session, parser) =>
+      graft.sources.WriteFsCheckpointFileManager.select(
+        session.sparkContext.hadoopConfiguration)
+      parser
+    }
     ext.injectPlannerStrategy(_ => GroupTopKStrategy)
     // operator-optimization batch: runs BEFORE Spark's own
     // InferWindowGroupLimit, so the bounded-heap plan wins when the

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 
@@ -87,6 +88,86 @@ object BackupSink {
     java.time.format.DateTimeFormatter.ofPattern(LineTsFmt)
       .withZone(java.time.ZoneId.of(zone))
 
+  /** Renders microsecond timestamps in one zone as [[lineFormatter]]
+    * and a `yyyyMMdd` formatter do, without a formatter call per value:
+    * the zone offset is cached until the zone's next transition and the
+    * date digits until the local day changes. Years outside 1–9999 take
+    * the formatters. One per task writer (not thread-safe). */
+  final class LineTimestamps(zone: java.time.ZoneId) {
+    private val rules = zone.getRules
+    private val lineFmt = lineFormatter(zone.getId)
+    private val dayFmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyyMMdd").withZone(zone)
+    // the offset holds on [offsetFrom, offsetTo), in epoch seconds
+    private var offsetFrom = Long.MaxValue
+    private var offsetTo = Long.MinValue
+    private var offset = 0L
+    private var day = Long.MinValue
+    private var plainYear = false
+    private var datePrefix = "" // yyyy-MM-dd and a space
+    private var dayDigits = "" // yyyyMMdd
+
+    /** The local epoch day of `micros`; moves the caches onto it. */
+    def localDay(micros: Long): Long = {
+      val secs = Math.floorDiv(micros, 1000000L)
+      if (secs < offsetFrom || secs >= offsetTo) {
+        val at = java.time.Instant.ofEpochSecond(secs)
+        offset = rules.getOffset(at).getTotalSeconds.toLong
+        val prev = rules.previousTransition(at.plusSeconds(1))
+        val next = rules.nextTransition(at)
+        offsetFrom = if (prev == null) Long.MinValue else prev.toEpochSecond
+        offsetTo = if (next == null) Long.MaxValue else next.toEpochSecond
+      }
+      val d = Math.floorDiv(secs + offset, 86400L)
+      if (d != day) {
+        day = d
+        val date = java.time.LocalDate.ofEpochDay(d)
+        plainYear = date.getYear >= 1 && date.getYear <= 9999
+        if (plainYear) {
+          dayDigits = f"${date.getYear}%04d${date.getMonthValue}%02d" +
+            f"${date.getDayOfMonth}%02d"
+          datePrefix = f"${date.getYear}%04d-${date.getMonthValue}%02d-" +
+            f"${date.getDayOfMonth}%02d "
+        }
+      }
+      d
+    }
+
+    /** `yyyyMMdd` of the local day of `micros`. */
+    def dayDir(micros: Long): String = {
+      localDay(micros)
+      if (plainYear) dayDigits
+      else dayFmt.format(DateTimeUtils.microsToInstant(micros))
+    }
+
+    def append(sb: java.lang.StringBuilder, micros: Long): Unit = {
+      val d = localDay(micros)
+      if (!plainYear)
+        sb.append(lineFmt.format(DateTimeUtils.microsToInstant(micros))): Unit
+      else {
+        val sod = (Math.floorDiv(micros, 1000000L) + offset - d * 86400L).toInt
+        sb.append(datePrefix)
+        digits(sb, sod / 3600, 2); sb.append(':')
+        digits(sb, sod / 60 % 60, 2); sb.append(':')
+        digits(sb, sod % 60, 2); sb.append('.')
+        digits(sb, Math.floorMod(micros, 1000000L).toInt, 6)
+      }
+    }
+
+    def format(micros: Long): String = {
+      val sb = new java.lang.StringBuilder(26)
+      append(sb, micros)
+      sb.toString
+    }
+
+    private def digits(sb: java.lang.StringBuilder, v: Int, width: Int): Unit = {
+      var div = 1
+      var w = 1
+      while (w < width) { div *= 10; w += 1 }
+      while (div > 0) { sb.append(('0' + v / div % 10).toChar); div /= 10 }
+    }
+  }
+
   /** A partition value as its leaf directory names it, before path
     * escaping (null stays null). The task writer names directories with
     * it and [[graft.operators.Backup.run]]'s dry run keys its counts
@@ -101,7 +182,7 @@ object BackupSink {
       case LongType => g.getLong(i).toString
       case IntegerType => g.getInt(i).toString
       case TimestampType =>
-        lineFmt.format(java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L))
+        lineFmt.format(DateTimeUtils.microsToInstant(g.getLong(i)))
       case DateType => java.time.LocalDate.ofEpochDay(g.getInt(i)).toString
       case other => throw new IllegalArgumentException(
         s"unsupported partition column type $other for ${f.name}")
@@ -740,9 +821,8 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
     .filter { case (f, _) => !cfg.partCols.contains(f.name) }.toSeq
 
   private val zone = java.time.ZoneId.of(cfg.zone)
-  private val dayFmt = java.time.format.DateTimeFormatter
-    .ofPattern("yyyyMMdd").withZone(zone)
   private val lineFmt = lineFormatter(cfg.zone)
+  private val lineTs = new LineTimestamps(zone)
 
   /** Counts final on-disk bytes below the CRC/gzip chain, so the
     * manifest record can carry sizes and batch planning never needs a
@@ -793,101 +873,114 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
     if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
     else ExternalCatalogUtils.escapePathName(v)
 
+  private type Getters =
+    org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+  private type Encoder = (java.lang.StringBuilder, Getters, Int) => Unit
+
   /** Recursive NDJSON value encoder over the §1.2 lattice (the
-    * reference's `helpers.go` recursion, Spark-side): scalars as JSON
-    * scalars, structs as objects with null fields OMITTED (Spark's
+    * reference's `helpers.go` recursion, Spark-side), built once per
+    * type so a row pays no type dispatch or name escaping: scalars as
+    * JSON scalars, structs as objects with null fields OMITTED (Spark's
     * `ignoreNullFields` convention, which the read side and [[
     * graft.operators.Restore]] already expect), arrays with null
     * elements KEPT (position is meaning), maps as objects with null
-    * values kept. `g` is whatever container holds the value —
+    * values kept. The getters are whatever container holds the value —
     * InternalRow and ArrayData share SpecializedGetters. */
-  private def appendValue(
-      sb: java.lang.StringBuilder, dt: DataType,
-      g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): Unit = dt match {
-    case LongType => sb.append(g.getLong(i)): Unit
-    case IntegerType => sb.append(g.getInt(i)): Unit
-    case ShortType => sb.append(g.getShort(i).toInt): Unit
-    case ByteType => sb.append(g.getByte(i).toInt): Unit
-    case DoubleType => sb.append(g.getDouble(i)): Unit
-    case FloatType => sb.append(g.getFloat(i).toDouble): Unit
-    case BooleanType => sb.append(g.getBoolean(i)): Unit
-    case d: DecimalType =>
+  private def encoder(dt: DataType): Encoder = dt match {
+    case LongType => (sb, g, i) => sb.append(g.getLong(i)): Unit
+    case IntegerType => (sb, g, i) => sb.append(g.getInt(i)): Unit
+    case ShortType => (sb, g, i) => sb.append(g.getShort(i).toInt): Unit
+    case ByteType => (sb, g, i) => sb.append(g.getByte(i).toInt): Unit
+    case DoubleType => (sb, g, i) => sb.append(g.getDouble(i)): Unit
+    case FloatType => (sb, g, i) => sb.append(g.getFloat(i).toDouble): Unit
+    case BooleanType => (sb, g, i) => sb.append(g.getBoolean(i)): Unit
+    case d: DecimalType => (sb, g, i) =>
       sb.append(g.getDecimal(i, d.precision, d.scale)
         .toJavaBigDecimal.toPlainString): Unit
-    case StringType => sb.append('"')
+    case StringType => (sb, g, i) => sb.append('"')
       .append(jsonEscape(g.getUTF8String(i).toString)).append('"'): Unit
-    case TimestampType => sb.append('"')
-      .append(lineFmt.format(
-        java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L)))
-      .append('"'): Unit
-    case TimestampNTZType => sb.append('"')
+    case TimestampType => (sb, g, i) =>
+      sb.append('"')
+      lineTs.append(sb, g.getLong(i))
+      sb.append('"'): Unit
+    case TimestampNTZType => (sb, g, i) => sb.append('"')
       .append(java.time.LocalDateTime.ofInstant(
-        java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L),
-        java.time.ZoneOffset.UTC).format(ntzFmt))
+        DateTimeUtils.microsToInstant(g.getLong(i)), java.time.ZoneOffset.UTC)
+        .format(ntzFmt))
       .append('"'): Unit
-    case DateType => sb.append('"')
+    case DateType => (sb, g, i) => sb.append('"')
       .append(java.time.LocalDate.ofEpochDay(g.getInt(i)).toString)
       .append('"'): Unit
     case st: StructType =>
-      val row = g.getStruct(i, st.size)
+      val obj = objectEncoder(st.fields.toSeq, Array.range(0, st.size))
+      (sb, g, i) => obj(sb, g.getStruct(i, st.size))
+    case ArrayType(et, _) =>
+      val elem = encoder(et)
+      (sb, g, i) =>
+        val arr = g.getArray(i)
+        sb.append('[')
+        var j = 0
+        while (j < arr.numElements()) {
+          if (j > 0) sb.append(',')
+          if (arr.isNullAt(j)) sb.append("null")
+          else elem(sb, arr, j)
+          j += 1
+        }
+        sb.append(']'): Unit
+    case MapType(kt, vt, _) =>
+      val value = encoder(vt)
+      (sb, g, i) =>
+        val m = g.getMap(i)
+        val keys = m.keyArray(); val vals = m.valueArray()
+        sb.append('{')
+        var j = 0
+        while (j < m.numElements()) {
+          if (j > 0) sb.append(',')
+          sb.append('"').append(jsonEscape(keyString(kt, keys, j)))
+            .append("\":")
+          if (vals.isNullAt(j)) sb.append("null")
+          else value(sb, vals, j)
+          j += 1
+        }
+        sb.append('}'): Unit
+    case other => (_, _, _) => throw new IllegalArgumentException(
+      s"graftbackup cannot encode value of type $other")
+  }
+
+  /** A JSON object over `fields`, read from the row ordinals `at`:
+    * each name escaped once, null fields omitted. */
+  private def objectEncoder(fields: Seq[StructField], at: Array[Int])
+      : (java.lang.StringBuilder, InternalRow) => Unit = {
+    val names = fields.map(f => "\"" + jsonEscape(f.name) + "\":").toArray
+    val values = fields.map(f => encoder(f.dataType)).toArray
+    (sb, row) => {
       sb.append('{')
       var first = true
       var j = 0
-      while (j < st.size) {
-        if (!row.isNullAt(j)) {
+      while (j < at.length) {
+        if (!row.isNullAt(at(j))) {
           if (!first) sb.append(',')
           first = false
-          sb.append('"').append(jsonEscape(st.fields(j).name)).append("\":")
-          appendValue(sb, st.fields(j).dataType, row, j)
+          sb.append(names(j))
+          values(j)(sb, row, at(j))
         }
         j += 1
       }
       sb.append('}'): Unit
-    case ArrayType(et, _) =>
-      val arr = g.getArray(i)
-      sb.append('[')
-      var j = 0
-      while (j < arr.numElements()) {
-        if (j > 0) sb.append(',')
-        if (arr.isNullAt(j)) sb.append("null")
-        else appendValue(sb, et, arr, j)
-        j += 1
-      }
-      sb.append(']'): Unit
-    case MapType(kt, vt, _) =>
-      val m = g.getMap(i)
-      val keys = m.keyArray(); val vals = m.valueArray()
-      sb.append('{')
-      var j = 0
-      while (j < m.numElements()) {
-        if (j > 0) sb.append(',')
-        sb.append('"').append(jsonEscape(keyString(kt, keys, j)))
-          .append("\":")
-        if (vals.isNullAt(j)) sb.append("null")
-        else appendValue(sb, vt, vals, j)
-        j += 1
-      }
-      sb.append('}'): Unit
-    case other => throw new IllegalArgumentException(
-      s"graftbackup cannot encode value of type $other")
+    }
   }
 
-  private def keyString(
-      dt: DataType,
-      g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      i: Int): String = dt match {
+  private def keyString(dt: DataType, g: Getters, i: Int): String = dt match {
     case StringType => g.getUTF8String(i).toString
     case LongType => g.getLong(i).toString
     case IntegerType => g.getInt(i).toString
     case ShortType => g.getShort(i).toString
     case ByteType => g.getByte(i).toString
     case BooleanType => g.getBoolean(i).toString
-    case TimestampType => lineFmt.format(
-      java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L))
+    case TimestampType => lineTs.format(g.getLong(i))
     case TimestampNTZType => java.time.LocalDateTime.ofInstant(
-      java.time.Instant.EPOCH.plusNanos(g.getLong(i) * 1000L),
-      java.time.ZoneOffset.UTC).format(ntzFmt)
+      DateTimeUtils.microsToInstant(g.getLong(i)), java.time.ZoneOffset.UTC)
+      .format(ntzFmt)
     case DateType => java.time.LocalDate.ofEpochDay(g.getInt(i)).toString
     case other => throw new IllegalArgumentException(
       s"graftbackup cannot encode map key of type $other")
@@ -896,35 +989,62 @@ class BackupDataWriter(cfg: BackupSink.Config, schema: StructType,
   private val ntzFmt =
     java.time.format.DateTimeFormatter.ofPattern(LineTsFmt)
 
+  // one line: the data fields (partition columns are directories)
+  private val lineObject =
+    objectEncoder(dataFields.map(_._1), dataFields.map(_._2).toArray)
+  private val line = new java.lang.StringBuilder(128)
+
   private def jsonLine(row: InternalRow): String = {
-    val sb = new java.lang.StringBuilder(128)
-    sb.append('{')
-    var first = true
-    dataFields.foreach { case (f, i) =>
-      if (!row.isNullAt(i)) { // omit-null convention (read side expects it)
-        if (!first) sb.append(',')
-        first = false
-        sb.append('"').append(jsonEscape(f.name)).append("\":")
-        appendValue(sb, f.dataType, row, i)
+    line.setLength(0)
+    lineObject(line, row) // omit-null convention (read side expects it)
+    line.toString
+  }
+
+  // the leaf of the previous row: its partition values (copied out of
+  // the row), its local day and its directory, rebuilt only on a change
+  private val leafValues = new Array[Any](partIdx.size)
+  private var leafDay = Long.MinValue
+  private var relDir: String = _
+  private var current: Chunk = _
+
+  private def leafChanged(row: InternalRow, day: Long): Boolean = {
+    var changed = relDir == null || day != leafDay
+    var j = 0
+    while (!changed && j < partIdx.size) {
+      val (f, i) = partIdx(j)
+      changed = (if (row.isNullAt(i)) null else row.get(i, f.dataType)) !=
+        leafValues(j)
+      j += 1
+    }
+    if (changed) {
+      leafDay = day
+      partIdx.indices.foreach { j =>
+        val (f, i) = partIdx(j)
+        leafValues(j) = if (row.isNullAt(i)) null
+          else InternalRow.copyValue(row.get(i, f.dataType))
       }
     }
-    sb.append('}').toString
+    changed
   }
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(timeIdx),
       s"graftbackup write: null ${cfg.timeCol} cannot be chunk-named")
     val ts = row.getLong(timeIdx)
-    val relDir = (partIdx.map { case (f, i) =>
-      s"${ExternalCatalogUtils.escapePathName(f.name)}=" +
-        escape(partitionValue(row, i, f, lineFmt))
-    } :+ s"date_dir=${dayFmt.format(
-      java.time.Instant.EPOCH.plusNanos(ts * 1000L))}").mkString("/")
-    val chunk = open.getOrElseUpdate(relDir, { chunkSeq += 1; new Chunk(relDir) })
-    chunk.write(jsonLine(row), ts)
-    if (chunk.rows >= cfg.maxRows) {
-      done += chunk.finish()
+    if (leafChanged(row, lineTs.localDay(ts))) {
+      relDir = (partIdx.map { case (f, i) =>
+        s"${ExternalCatalogUtils.escapePathName(f.name)}=" +
+          escape(partitionValue(row, i, f, lineFmt))
+      } :+ s"date_dir=${lineTs.dayDir(ts)}").mkString("/")
+      current = null
+    }
+    if (current == null) current =
+      open.getOrElseUpdate(relDir, { chunkSeq += 1; new Chunk(relDir) })
+    current.write(jsonLine(row), ts)
+    if (current.rows >= cfg.maxRows) {
+      done += current.finish()
       open.remove(relDir): Unit
+      current = null
     }
   }
 

@@ -1135,16 +1135,19 @@ class BackupReaderFactory(required: StructType, partCols: Set[String],
 final case class BackupOffset(counts: Map[String, Int])
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String = {
-    val m = new ObjectMapper()
-    val node = m.createObjectNode()
+    val node = BackupOffset.mapper.createObjectNode()
     counts.toSeq.sortBy(_._1).foreach { case (d, n) => node.put(d, n) }
-    m.writeValueAsString(node)
+    BackupOffset.mapper.writeValueAsString(node)
   }
 }
 
 object BackupOffset {
+  // configured once, then only read and written through: Jackson's
+  // mapper is thread-safe for that use
+  private val mapper = new ObjectMapper()
+
   def fromJson(s: String): BackupOffset = {
-    val node = new ObjectMapper().readTree(s)
+    val node = mapper.readTree(s)
     val b = Map.newBuilder[String, Int]
     val it = node.fields()
     while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asInt() }
@@ -1513,9 +1516,9 @@ class BackupMicroBatchStream(val path: String, required: StructType,
   * field, the extraction kind is fixed at construction: partition fields
   * and the `_chunk_*` provenance columns are per-chunk constants,
   * switched at each chunk boundary; data fields come from the per-line
-  * JSON. When no data field is required the JSON parse is skipped
-  * entirely. A pushed limit caps the partition, and a pushed TopN keeps
-  * one bounded heap for the partition. */
+  * JSON ([[LineDecoder]]). When no data field is required the JSON parse
+  * is skipped entirely. A pushed limit caps the partition, and a pushed
+  * TopN keeps one bounded heap for the partition. */
 class BackupPartitionReader(p: BackupReadPartition, required: StructType,
                             partCols: Set[String], conf: Configuration,
                             limit: Option[Int] = None,
@@ -1523,32 +1526,33 @@ class BackupPartitionReader(p: BackupReadPartition, required: StructType,
     extends PartitionReader[InternalRow] {
   import BackupSource._
 
-  private val mapper = new ObjectMapper()
   private val maxLines: Long = limit.map(_.toLong).getOrElse(Long.MaxValue)
   private var emitted = 0L
 
-  private val needsParse = required.fields.exists(f =>
-    !partCols(f.name) && !MetaColNames.contains(f.name))
+  private val decoder = new LineDecoder(required.fields.zipWithIndex.collect {
+    case (f, i) if !partCols(f.name) && !MetaColNames.contains(f.name) =>
+      (f.name, i, f.dataType)
+  })
   private val chunks = p.chunks.iterator
   private var reader: java.io.BufferedReader = _
 
-  // Left(per-chunk constant) | Right((json field, type)). Reserved
-  // provenance names resolve to per-chunk constants — no JSON parse,
-  // and they shadow same-named JSON fields (documented).
-  private var extractors: Array[Either[Any, (String, DataType)]] = _
+  // The current chunk's row template: partition values and the `_chunk_*`
+  // provenance columns at their ordinals, null at every data field.
+  // Reserved provenance names resolve to per-chunk constants — no JSON
+  // parse, and they shadow same-named JSON fields (documented).
+  private var constants: Array[Any] = _
 
-  private def extractorsFor(c: BackupChunk)
-      : Array[Either[Any, (String, DataType)]] = {
+  private def constantsFor(c: BackupChunk): Array[Any] = {
     lazy val name = ChunkName.parse(new Path(c.file).getName)
     required.fields.map { f =>
       if (partCols(f.name)) {
-        Left(UTF8String.fromString(c.partValues.getOrElse(f.name, null)))
+        UTF8String.fromString(c.partValues.getOrElse(f.name, null))
       } else if (f.name == "_chunk_file") {
-        Left(UTF8String.fromString(c.file))
+        UTF8String.fromString(c.file)
       } else if (f.name == "_chunk_from" || f.name == "_chunk_to") {
-        Left(UTF8String.fromString(name
-          .map(n => if (f.name == "_chunk_from") n.from else n.to).orNull))
-      } else Right((f.name, f.dataType))
+        UTF8String.fromString(name
+          .map(n => if (f.name == "_chunk_from") n.from else n.to).orNull)
+      } else null
     }
   }
 
@@ -1560,7 +1564,7 @@ class BackupPartitionReader(p: BackupReadPartition, required: StructType,
     while (l == null && chunks.hasNext) {
       close()
       val c = chunks.next()
-      extractors = extractorsFor(c)
+      constants = constantsFor(c)
       reader = open(c.file, conf)
       l = reader.readLine()
     }
@@ -1612,32 +1616,100 @@ class BackupPartitionReader(p: BackupReadPartition, required: StructType,
     if (topRows != null) row else decode(line)
 
   private def decode(l: String): InternalRow = {
-    val node: JsonNode = if (needsParse) mapper.readTree(l) else null
-    val row = new GenericInternalRow(extractors.length)
-    var i = 0
-    while (i < extractors.length) {
-      extractors(i) match {
-        case Left(const) => row.update(i, const)
-        case Right((name, dt)) =>
-          val v = node.get(name)
-          if (v == null || v.isNull) row.update(i, null)
-          else dt match {
-            case LongType => row.update(i, v.asLong())
-            case DoubleType => row.update(i, v.asDouble())
-            case BooleanType => row.update(i, v.asBoolean())
-            case IntegerType => row.update(i, v.asInt())
-            case StringType =>
-              val s = if (v.isTextual) v.asText() else v.toString
-              row.update(i, UTF8String.fromString(s))
-            case other => throw new IllegalArgumentException(
-              s"graftbackup cannot decode $name as $other")
-          }
-      }
-      i += 1
-    }
+    val row = new GenericInternalRow(constants.clone())
+    if (!decoder.isEmpty) decoder.into(l, row)
     row
   }
 
   override def close(): Unit =
     if (reader != null) { reader.close(); reader = null }
+}
+
+/** Reads the data fields of one NDJSON line into a row in one streaming
+  * pass: each field of `fields` (JSON name, row ordinal, type) is
+  * converted where it stands and every other value is skipped, with no
+  * tree built. A later duplicate key wins, as in a tree read. A value
+  * the scalar cases do not cover (a container, text read as a number, a
+  * number read as another number type), and a line that is not an
+  * object, go through a tree node of just that value or line, so every
+  * line decodes as `readTree(line).get(name)` converted by
+  * [[LineDecoder.convert]]. */
+private[graft] final class LineDecoder(fields: Array[(String, Int, DataType)]) {
+  import LineDecoder._
+  import com.fasterxml.jackson.core.{JsonParser, JsonToken}
+
+  private val mapper = new ObjectMapper()
+  private val slot = new java.util.HashMap[String, Integer]()
+  fields.indices.foreach(j => slot.put(fields(j)._1, j))
+  private val kinds = fields.map(f => kindOf(f._3))
+
+  def isEmpty: Boolean = fields.isEmpty
+
+  def into(line: String, row: GenericInternalRow): Unit = {
+    val p = mapper.createParser(line)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) {
+        val node = mapper.readTree(line)
+        fields.foreach { case (n, i, dt) => row.update(i, convert(node.get(n), n, dt)) }
+      } else while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val j = slot.get(p.currentName())
+        p.nextToken()
+        if (j == null) p.skipChildren(): Unit
+        else row.update(fields(j)._2, value(p, j))
+      }
+    } finally p.close()
+  }
+
+  private def value(p: JsonParser, j: Int): Any = {
+    val t = p.currentToken()
+    kinds(j) match {
+      case _ if t == JsonToken.VALUE_NULL => null
+      case Text if t == JsonToken.VALUE_STRING => UTF8String.fromString(p.getText)
+      case Long64 if t == JsonToken.VALUE_NUMBER_INT &&
+          p.getNumberType != JsonParser.NumberType.BIG_INTEGER => p.getLongValue
+      case Int32 if t == JsonToken.VALUE_NUMBER_INT &&
+          p.getNumberType == JsonParser.NumberType.INT => p.getIntValue
+      case Double64 if t == JsonToken.VALUE_NUMBER_FLOAT => p.getDoubleValue
+      case Bool if t == JsonToken.VALUE_TRUE || t == JsonToken.VALUE_FALSE =>
+        t == JsonToken.VALUE_TRUE
+      case _ =>
+        val (n, _, dt) = fields(j)
+        convert(mapper.readTree[JsonNode](p), n, dt)
+    }
+  }
+}
+
+private[graft] object LineDecoder {
+  private final val Long64 = 0
+  private final val Double64 = 1
+  private final val Bool = 2
+  private final val Int32 = 3
+  private final val Text = 4
+  private final val Other = 5
+
+  private def kindOf(dt: DataType): Int = dt match {
+    case LongType => Long64
+    case DoubleType => Double64
+    case BooleanType => Bool
+    case IntegerType => Int32
+    case StringType => Text
+    case _ => Other
+  }
+
+  /** A JSON value as a field of type `dt`: null for a missing or JSON
+    * null value, else `JsonNode`'s own conversion; a non-text value read
+    * as a string is its JSON text. */
+  def convert(v: JsonNode, name: String, dt: DataType): Any =
+    if (v == null || v.isNull) null
+    else dt match {
+      case LongType => v.asLong()
+      case DoubleType => v.asDouble()
+      case BooleanType => v.asBoolean()
+      case IntegerType => v.asInt()
+      case StringType =>
+        val s = if (v.isTextual) v.asText() else v.toString
+        UTF8String.fromString(s)
+      case other => throw new IllegalArgumentException(
+        s"graftbackup cannot decode $name as $other")
+    }
 }

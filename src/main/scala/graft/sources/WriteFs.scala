@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
@@ -10,7 +10,8 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** The filesystem every graftbackup write goes through (sink commits,
   * task writers, manifest and stamp records, the batch operators'
-  * metadata and retention writes).
+  * metadata and retention writes), and streaming checkpoint files
+  * through [[WriteFsCheckpointFileManager]].
   *
   * Without libhadoop, `RawLocalFileSystem.setPermission` forks a
   * `chmod` process (`Shell.execCommand`), and Hadoop calls it for every
@@ -51,6 +52,21 @@ private[sources] final class NioLocalFileSystem
     extends LocalFileSystem(new NioPermissionFileSystem) {
   override def rename(src: Path, dst: Path): Boolean =
     !isFile(dst) && super.rename(src, dst)
+
+  /** Moves file `src` onto `dst`, replacing any file there with one
+    * rename(2), then moves its `.crc` sidecar. The target's old sidecar
+    * goes first: a reader between the steps finds a file without a
+    * sidecar, which reads unchecked, never one checked against another
+    * file's sums. */
+  def replace(src: Path, dst: Path): Unit = {
+    def local(p: Path) = pathToFile(p).toPath
+    val srcCrc = local(getChecksumFile(src))
+    val dstCrc = local(getChecksumFile(dst))
+    Files.deleteIfExists(dstCrc)
+    Files.move(local(src), local(dst), StandardCopyOption.ATOMIC_MOVE)
+    if (Files.exists(srcCrc))
+      Files.move(srcCrc, dstCrc, StandardCopyOption.ATOMIC_MOVE): Unit
+  }
 }
 
 /** `RawLocalFileSystem` whose `setPermission` sets the nine

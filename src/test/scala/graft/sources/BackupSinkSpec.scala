@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.time.Instant
 import java.util.zip.CRC32
 
 import org.apache.spark.sql.functions._
@@ -383,5 +384,60 @@ class BackupSinkSpec extends SparkTestBase {
       new java.io.File(dir, "_GRAFT_META.json").toPath))
     assert(meta.contains("\"sessionTimeZone\":\"UTC\""))
     assert(meta.contains("\"timeColumn\":\"ts\""))
+  }
+
+  test("line timestamps and date_dir across DST changes in a non-UTC " +
+    "session zone are the formatters' output, byte for byte") {
+    val zone = "America/New_York"
+    val ny = spark.newSession()
+    ny.conf.set("spark.sql.session.timeZone", zone)
+    val fixed = Seq(
+      "2024-03-10T04:59:59.999999Z", "2024-03-10T05:00:00Z", // local midnight
+      "2024-03-10T06:59:59.999999Z", "2024-03-10T07:00:00Z", // 02:00 skipped
+      "2024-03-10T07:00:00.000001Z",
+      "2024-11-03T05:59:59.5Z", "2024-11-03T06:00:00Z", // 01:xx repeats
+      "2024-11-03T06:30:00.25Z", "2024-11-03T07:00:00Z",
+      "1969-12-31T23:59:59.999999Z", "1970-01-01T00:00:00.000001Z",
+      "1850-06-01T12:00:00.123456Z", // local mean time, -04:56:02
+      "2099-12-31T23:59:59.000001Z").map(Instant.parse)
+    val sweep = (0 until 60).flatMap { h =>
+      Seq(Instant.parse("2024-03-09T12:00:00Z"),
+        Instant.parse("2024-11-02T12:00:00Z"))
+        .map(_.plusSeconds(h * 1800L).plusNanos(h * 7000L))
+    }
+    val kinds = Seq("a", "b")
+    val rows = (fixed ++ sweep).zipWithIndex.map { case (t, i) =>
+      (i.toLong, t, s"q\"$i\\\n", kinds(i % 2))
+    }
+    val dir = freshDir()
+    ny.createDataFrame(rows).toDF("id", "ts", "note", "kind")
+      .withColumn("nested", struct($"ts".as("at")))
+      .select("id", "ts", "note", "nested", "kind")
+      .write.format("graftbackup").mode("overwrite")
+      .option("partitionColumns", "kind").option("timeColumn", "ts")
+      .option("maxRecordsPerChunk", "17")
+      .save(dir)
+
+    val lineFmt = BackupSink.lineFormatter(zone)
+    val dayFmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd")
+      .withZone(java.time.ZoneId.of(zone))
+    val want = rows.map { case (id, t, note, kind) =>
+      val ts = lineFmt.format(t)
+      id -> ((s"kind=$kind/date_dir=${dayFmt.format(t)}",
+        s"""{"id":$id,"ts":"$ts","note":"${BackupSink.jsonEscape(note)}",""" +
+          s""""nested":{"at":"$ts"}}"""))
+    }.toMap
+    val IdOf = "\\{\"id\":(\\d+),.*".r
+    val got = new java.io.File(dir).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.isDirectory).toSeq
+      .flatMap { leaf =>
+        val rel = s"${leaf.getParentFile.getName}/${leaf.getName}"
+        leaf.listFiles().filter(_.getName.endsWith(".log.gz")).toSeq
+          .flatMap(chunkLines).map { case l @ IdOf(id) => id.toLong -> (rel, l) }
+      }
+    assert(got.map(_._1).sorted == rows.map(_._1))
+    got.foreach { case (id, have) =>
+      assert(have == want(id), s"row $id")
+    }
   }
 }

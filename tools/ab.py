@@ -3,7 +3,8 @@
 
 Run from the repository root:
 
-    python3 tools/ab.py --base HEAD~1 --workload bulk_backup --pairs 10 [--trace]
+    python3 tools/ab.py --base HEAD~1 --workload bulk_backup --pairs 10 \
+        [--first-seed N] [--trace]
 
 The base revision is extracted with `git archive` into
 .bench_build/ab/<sha>/, which keeps its own .bench_build and so its own
@@ -19,8 +20,9 @@ base's interquartile range; "worse" when those hold the other way
 round; otherwise "unresolved". It is also "over bound" when the change
 is worse than the base median by more than the metric's bound. With
 --trace, every pair also runs a traced run on each side and the table
-is followed by the per-layer medians. Pair i uses seed i. Exits 1 if any run failed or was
-incorrect, or a metric is over its bound.
+is followed by the per-layer medians. Pair i uses seed i, or seed
+N + i - 1 with --first-seed N (e.g. 1000003, the held-out seed). Exits 1
+if any run failed or was incorrect, or a metric is over its bound.
 """
 import argparse
 import json
@@ -99,6 +101,9 @@ def main():
     ap.add_argument("--base", required=True, help="git revision to compare")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1,
+                    help="seed of the first pair; pair i runs seed "
+                         "first-seed + i - 1 (default 1)")
     ap.add_argument("--trace", action="store_true",
                     help="also run traced and print per-layer medians")
     a = ap.parse_args()
@@ -114,7 +119,7 @@ def main():
     traced = {"base": [], "change": []}
     failures = 0
     for i in range(a.pairs):
-        seed = i + 1
+        seed = a.first_seed + i
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
         for trace in ([False, True] if a.trace else [False]):
             got = {s: run(s, sides[s], a.workload, seed, seconds, trace)
@@ -134,7 +139,8 @@ def main():
     ok = [i for i in range(a.pairs) if runs["base"][i] and runs["change"][i]]
     print(f"workload {a.workload}: base {a.base} ({sha[:12]}) vs this "
           f"checkout, {len(ok)} complete pairs of {a.pairs}, "
-          f"seconds {seconds}, seeds 1..{a.pairs}")
+          f"seconds {seconds}, seeds {a.first_seed}.."
+          f"{a.first_seed + a.pairs - 1}")
     print(f"  runs failed or incorrect: {failures}")
     over = False
     if ok:
